@@ -91,6 +91,9 @@ def degrade_windows(
                 # the former per-row list comprehensions — identical
                 # values (r12; the per-window seeded Generator stream is
                 # the determinism contract and stays per-row)
+                if len(mat) == 0:  # np.stack needs at least one row
+                    append([])
+                    continue
                 x = np.stack(mat).astype(np.float64, copy=False)
                 rng = _rng_for(seed, wid)
                 y = _degrade_matrix(x, severity, kind, rng)

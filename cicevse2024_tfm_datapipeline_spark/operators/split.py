@@ -9,9 +9,10 @@ a small-group guard when ``n_train + n_val >= n``:
     n_val   = max(0, min(n - n_train - 1, n_val))
 
 Spark-first shape: one window pass — ``row_number`` + ``count`` over
-``partitionBy(groups).orderBy(time, tiebreak)`` and a CASE on floor-of-count
-arithmetic. No iteration over groups, no concat: the split of ALL groups is
-a single shuffle by the group key, which scales linearly with data and is
+``partitionBy(groups).orderBy(time, tiebreak)``, each computed once as a
+column, and a CASE on floor-of-count arithmetic over those columns. No
+iteration over groups, no concat: the split of ALL groups is a single
+shuffle by the group key, which scales linearly with data and is
 skew-tolerant under AQE. ``percent_rank`` would NOT reproduce the ``int()``
 truncation on small groups, so we use explicit floor arithmetic.
 
@@ -59,12 +60,16 @@ def chrono_split(
     order = [F.col(time_col).asc(), F.col(tiebreak_col).asc()]
     win = W.partitionBy(*group_cols).orderBy(*order)
     cnt = W.partitionBy(*group_cols)
-    rn = F.row_number().over(win)
-    n = F.count(F.lit(1)).over(cnt)
+    # rn and n as columns: the CASE below names each several times, and
+    # inlined window expressions would each be planned again
+    df = df.withColumn("__split_rn", F.row_number().over(win)).withColumn(
+        "__split_n", F.count(F.lit(1)).over(cnt)
+    )
+    rn, n = F.col("__split_rn"), F.col("__split_n")
     n_train, n_val = split_size_exprs(n, train_frac, val_frac)
     split = (
         F.when(rn <= n_train, F.lit("train"))
         .when(rn <= n_train + n_val, F.lit("val"))
         .otherwise(F.lit("test"))
     )
-    return df.withColumn(split_col, split)
+    return df.withColumn(split_col, split).drop("__split_rn", "__split_n")

@@ -12,10 +12,18 @@ Spark-first shape:
 - W5 standardization = one small agg on the train split (avg + stddev_pop
   per feature) broadcast back as literal arithmetic — no shuffle of the
   big table, stays in whole-stage codegen.
-- W3 windows = trailing row frames ``rowsBetween(-(L-1), 0)`` over
-  ``partitionBy(group).orderBy(ts, tiebreak)``; a row is a window END iff
-  ``rn >= L`` and ``(rn - L) % step == 0``. The label/episode at the frame
-  end is just the current row's value (W4) — no extra pass.
+- W3 windows start from one ``row_number`` ``rn`` over
+  ``partitionBy(group).orderBy(ts, tiebreak)``; window ``k`` holds the
+  rows with ``k·step < rn ≤ k·step + L``.
+  - The array path (``sliding_windows``) runs trailing row frames
+    ``rowsBetween(-(L-1), 0)`` and keeps the window ENDS (``rn >= L`` and
+    ``(rn - L) % step == 0``); the label/episode at the frame end is the
+    current row's value (W4) — no extra pass.
+  - The stats path (``window_summary_stats``) uses the same frames when
+    windows overlap (``step < L``). When they do not, each row is in at
+    most one window ``(rn - 1) div step``, and each window is computed once
+    with a keyed aggregate on ``(group, window_id)``, clustered on the
+    shuffle the ``row_number`` already made.
 
 Scale note (SURVEY §7.4 risk 2): the reference windows one global series;
 a single unpartitioned ``Window.orderBy`` would serialize 100 TB through
@@ -155,9 +163,82 @@ def window_summary_stats(
     surrogate-model tabular featurization (func_aux/func_models.py:351-391;
     NumPy ``std`` there is population std → ``stddev_pop``).
 
-    Computed directly with frame aggregates — never materializes the
-    window arrays, so row width stays O(features), not O(features·seq_len).
+    Output: group cols, ``window_id``, ``<f>_mean/_std/_min/_max`` per
+    feature, plus ``window_label`` (the window-end row's label) when
+    ``label_col`` is given. Never materializes the window arrays, so row
+    width stays O(features), not O(features·seq_len).
+
+    When ``step >= seq_len`` each row is in at most one window, and each
+    window is aggregated once with a keyed aggregate
+    (:func:`_window_stats_keyed`). Otherwise trailing-frame aggregates run
+    on every row and the window ends are kept (:func:`_window_stats_frames`).
+    The two paths give the same rows: bit-identical when the aggregate does
+    not spill, equal within floating-point rounding when it does (a spill
+    merges partial mean/std buffers in another order).
     """
+    if step >= seq_len:
+        return _window_stats_keyed(
+            df, group_cols, time_col, tiebreak_col, features, seq_len, step, label_col
+        )
+    return _window_stats_frames(
+        df, group_cols, time_col, tiebreak_col, features, seq_len, step, label_col
+    )
+
+
+def _window_stats_keyed(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    time_col: str,
+    tiebreak_col: str,
+    features: Sequence[str],
+    seq_len: int,
+    step: int,
+    label_col: str | None,
+) -> DataFrame:
+    """For ``step >= seq_len`` only. Window ``k`` holds the rows with
+    ``k·step < rn ≤ k·step + seq_len``, so a row is in window
+    ``(rn - 1) div step`` unless it sits in the gap between windows; then
+    ``groupBy(groups, window_id)`` computes the stats and keeps full
+    windows only. The aggregate is clustered on the group keys the
+    ``row_number`` window already shuffled by, so it adds no exchange."""
+    order_win = W.partitionBy(*group_cols).orderBy(F.col(time_col).asc(), F.col(tiebreak_col).asc())
+    out = (
+        df.withColumn("__rn", F.row_number().over(order_win))
+        .filter(F.expr(f"(__rn - 1) % {step} < {seq_len}"))
+        .withColumn("window_id", F.expr(f"(__rn - 1) div {step}"))
+    )
+    aggs: list[Column] = []
+    for f in features:
+        aggs += [
+            F.avg(F.col(f)).alias(f"{f}_mean"),
+            F.stddev_pop(F.col(f)).alias(f"{f}_std"),
+            F.min(F.col(f)).alias(f"{f}_min"),
+            F.max(F.col(f)).alias(f"{f}_max"),
+        ]
+    if label_col is not None:
+        aggs.append(F.max_by(F.col(label_col), F.col("__rn")).alias("window_label"))
+    aggs.append(F.count(F.lit(1)).alias("__n"))
+    return (
+        out.groupBy(*group_cols, "window_id")
+        .agg(*aggs)
+        .filter(F.col("__n") == F.lit(seq_len))
+        .drop("__n")
+    )
+
+
+def _window_stats_frames(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    time_col: str,
+    tiebreak_col: str,
+    features: Sequence[str],
+    seq_len: int,
+    step: int,
+    label_col: str | None,
+) -> DataFrame:
+    """Trailing ``rowsBetween(-(seq_len-1), 0)`` aggregates on every row,
+    kept at the window ends (``rn >= seq_len``, ``(rn - seq_len) % step
+    == 0``); the label is the end row's own."""
     order_win = W.partitionBy(*group_cols).orderBy(F.col(time_col).asc(), F.col(tiebreak_col).asc())
     frame = order_win.rowsBetween(-(seq_len - 1), 0)
 

@@ -79,8 +79,6 @@ def run_power_pipeline(spark: SparkSession, events: DataFrame, cfg: PipelineConf
     t0 = time.perf_counter()
     df = events.withColumn("state_bin", charging_flag_expr(cfg.state_col))
     df, target_col = prepare_labels_for_task(df, cfg.task, cfg.attack_col)
-    if cfg.task == "binary":
-        df = df  # keep all rows; benign-vs-attack is the target itself
     # P5 + F11: clean and encode
     feats = list(cfg.num_features) + list(cfg.cat_features)
     df = df.na.drop(subset=feats + [target_col])

@@ -29,6 +29,18 @@ def test_degrade_deterministic_under_repartition(spark, kind):
     assert pa == pb
 
 
+@pytest.mark.parametrize("kind", ["packet_loss", "missing_variables", "clock_offset", "drift"])
+def test_degrade_empty_matrix_stays_empty(spark, kind):
+    from cicevse2024_tfm_datapipeline_spark.operators.degrade import degrade_windows
+
+    rows = [(0, []), (1, [[1.0, 2.0], [3.0, 4.0]])]
+    df = spark.createDataFrame(rows, "window_id long, matrix array<array<double>>")
+    out = degrade_windows(df, "matrix", "window_id", 0.5, kind, seed=7)
+    got = {r["window_id"]: r["matrix"] for r in out.collect()}
+    assert got[0] == []
+    assert len(got[1]) == 2
+
+
 def test_packet_loss_zeroes_whole_timesteps(spark):
     from cicevse2024_tfm_datapipeline_spark.operators.degrade import degrade_windows
 

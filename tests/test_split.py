@@ -52,3 +52,22 @@ def test_split_is_chronological(spark):
     for r in out:
         by_split.setdefault(r["split"], []).append(r["event_id"])
     assert max(by_split["train"]) < min(by_split["val"]) < min(by_split["test"])
+
+
+def test_split_plans_each_window_expression_once(spark):
+    """row_number and the group count are computed once as columns, not
+    once per mention in the split CASE."""
+    import re
+
+    from cicevse2024_tfm_datapipeline_spark.operators.split import chrono_split
+
+    base = datetime.datetime(2024, 1, 1)
+    rows = [("g", "s", base + datetime.timedelta(seconds=i), i) for i in range(20)]
+    df = spark.createDataFrame(rows, ["attack", "state", "ts", "event_id"])
+    out = chrono_split(df, ["attack", "state"], "ts", "event_id")
+    assert out.columns == df.columns + ["split"]
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]  # AQE's final plan only
+    assert len(re.findall(r"row_number\(\) windowspecdefinition", plan)) == 1, plan
+    assert len(re.findall(r"count\(1\) windowspecdefinition", plan)) == 1, plan

@@ -83,6 +83,98 @@ def test_windows_via_pandas_short_group_and_nonstring_keys(spark):
     assert sorted(r["window_label"] for r in got) == [3, 4, 5]
 
 
+def _stats_input(spark):
+    """Groups of 37 and 16 rows, a 3-row group shorter than any window, a
+    null group key, timestamps tied in pairs (the ``rid`` tiebreak runs
+    against insertion order), null features and an integer label with a
+    null."""
+    base = datetime.datetime(2024, 1, 1)
+    rows = []
+    for g, h, n in (("a", 1, 37), ("a", 2, 16), ("b", 1, 3), (None, 2, 21)):
+        for i in range(n):
+            rows.append((
+                g,
+                h,
+                base + datetime.timedelta(seconds=i // 2),
+                1000 * h + (n - i),  # ties resolve in reverse insertion order
+                None if i % 7 == 3 else i / 3.0 + h / 7.0,
+                (i * 5) % 11,
+                None if i == 20 else i % 4,
+            ))
+    schema = "g string, h int, ts timestamp, rid long, x double, y long, lab int"
+    return spark.createDataFrame(rows, schema)
+
+
+@pytest.mark.parametrize(
+    "seq_len,step",
+    [(L, s) for L in (5, 15) for s in (L, L + 1, L + 7)],
+)
+def test_window_stats_keyed_matches_frames(spark, seq_len, step):
+    """Where windows do not overlap, the keyed aggregate and the trailing
+    frames give the same rows, bit for bit (inputs this small never
+    spill)."""
+    from cicevse2024_tfm_datapipeline_spark.operators.windows import (
+        _window_stats_frames,
+        _window_stats_keyed,
+    )
+
+    args = (_stats_input(spark), ["g", "h"], "ts", "rid", ["x", "y"], seq_len, step, "lab")
+    keyed = _window_stats_keyed(*args)
+    frames = _window_stats_frames(*args)
+    assert keyed.dtypes == frames.dtypes
+    assert keyed.exceptAll(frames).count() == 0
+    assert frames.exceptAll(keyed).count() == 0
+    got = frames.groupBy("g", "h").count().collect()
+    assert ("b", 1) not in {(r["g"], r["h"]) for r in got}  # short group
+    assert (None, 2) in {(r["g"], r["h"]) for r in got}  # null key windows
+
+
+@pytest.mark.parametrize("seq_len,step", [(3, 1), (4, 2), (5, 5), (4, 3), (3, 7)])
+def test_window_summary_stats_matches_python(spark, seq_len, step):
+    from cicevse2024_tfm_datapipeline_spark.operators.windows import window_summary_stats
+
+    n = 12
+    out = window_summary_stats(
+        make_series(spark, n), ["grp"], "ts", "rid", ["x"], seq_len, step, label_col="lab"
+    ).collect()
+    starts = list(range(0, n - seq_len + 1, step))
+    assert sorted(r["window_id"] for r in out) == list(range(len(starts)))
+    for r in out:
+        start = starts[r["window_id"]]
+        xs = [float((start + j) * 10) for j in range(seq_len)]
+        assert (r["x_min"], r["x_max"]) == (xs[0], xs[-1])
+        assert r["x_mean"] == pytest.approx(sum(xs) / seq_len)
+        assert r["window_label"] == str((start + seq_len - 1) % 3)
+
+
+def _final_plan(df) -> str:
+    """The executed physical plan after a run (AQE's final plan only)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+@pytest.mark.parametrize("step", [15, 22])
+def test_window_summary_stats_wide_hop_plan(spark, step):
+    """At ``step >= seq_len`` no sliding row frame is evaluated and the
+    keyed aggregate reuses the ``row_number`` shuffle."""
+    import re
+
+    from pyspark.sql import Window
+
+    from cicevse2024_tfm_datapipeline_spark.operators.windows import window_summary_stats
+
+    df = _stats_input(spark).repartition(3)
+    out = window_summary_stats(df, ["g", "h"], "ts", "rid", ["x", "y"], 15, step, "lab")
+    plan = _final_plan(out)
+    assert not re.search(r"RowFrame, -\d+", plan), plan
+    ranked = df.withColumn(
+        "rn", F.row_number().over(Window.partitionBy("g", "h").orderBy("ts", "rid"))
+    )
+    exchanges = r"\bExchange\b"
+    assert len(re.findall(exchanges, plan)) == len(re.findall(exchanges, _final_plan(ranked))), plan
+
+
 def test_standardizer_population_std(spark):
     from cicevse2024_tfm_datapipeline_spark.operators.windows import (
         apply_standardizer,
