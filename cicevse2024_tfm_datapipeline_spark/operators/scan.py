@@ -25,12 +25,15 @@ reference's semantics genuinely demand a total order
 
 from __future__ import annotations
 
+import datetime
 import math
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+from cicevse2024_tfm_datapipeline_spark.sources.readers import table_column_minmax
 
 PID = "__scan_pid"
 
@@ -371,6 +374,36 @@ def uniform_grid(lo, hi, n_buckets: int) -> list[float]:
     lo, hi = float(lo), float(hi)
     step = (hi - lo) / n_buckets
     return [lo + i * step for i in range(1, n_buckets)] if step > 0 else []
+
+
+def footer_grid(
+    spark: SparkSession, sf_dir: str, table: str, column: str, scale: float = 1.0
+) -> list[float] | None:
+    """``uniform_grid`` over ``[min*scale, max*scale]`` of ``table.column``
+    from its parquet footer statistics, one bucket per shuffle partition
+    — the ``fixed_bounds`` for a scan keyed on that column (``scale``
+    for a key derived as ``column * scale``). Datetime statistics map to
+    epoch seconds of the naive value, the unit ``_bounds_key_expr``
+    buckets timestamps in.
+
+    Returns ``None`` when the footers lack statistics for the column;
+    ``fixed_bounds=None`` then takes the quantile-bounds path.
+
+    The grid only brackets the key approximately: a key rounded after
+    scaling (``floor(v*10000+0.5)``) can land one tick past the top
+    bound, which only fills the last bucket. Results never depend on the
+    grid (see ``uniform_grid``)."""
+    mm = table_column_minmax(sf_dir, table, column)
+    if mm is None:
+        return None
+    lo, hi = (
+        (v - datetime.datetime(1970, 1, 1)).total_seconds()
+        if isinstance(v, datetime.datetime)
+        else v
+        for v in mm
+    )
+    n_b = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return uniform_grid(float(lo) * scale, float(hi) * scale, n_b)
 
 
 def global_cumsum(

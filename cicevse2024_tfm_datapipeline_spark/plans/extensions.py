@@ -1161,14 +1161,9 @@ def pack_concat_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # / weighted-median discipline) — no pinned range exchange, no
     # sampler job, no localCheckpoint planning pass; grid values shift
     # bucket balance only (synthetic doc_ids are contiguous)
-    from cicevse2024_tfm_datapipeline_spark.operators.scan import uniform_grid
-    from cicevse2024_tfm_datapipeline_spark.sources.readers import (
-        table_column_minmax,
-    )
+    from cicevse2024_tfm_datapipeline_spark.operators.scan import footer_grid
 
-    lo, hi = table_column_minmax(sf_dir, "documents", "doc_id")
-    n_b = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    grid = uniform_grid(lo, hi, n_b)
+    grid = footer_grid(spark, sf_dir, "documents", "doc_id")
     cum = global_cumsum(
         per_doc, ["doc_id"], ["n_tok"], bucketing="bounds", fixed_bounds=grid
     )

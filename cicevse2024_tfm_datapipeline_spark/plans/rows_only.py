@@ -526,7 +526,8 @@ def r5_hash_permutation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").select("event_id", "event_type", "value")
     # id_bounds from footer statistics (r12): both rank scans run in
     # fixed-bounds mode — no pinned range exchange, no quantile job; the
-    # grid only sets bucket balance, never results (degrade.py comment)
+    # grid only sets bucket balance, never results (degrade.py comment).
+    # Without statistics (None) the id side takes the pinned path.
     perm = permute_feature_hash(
         ev,
         "value",
@@ -658,9 +659,9 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     order (maxFilesPerTrigger interacts with lexicographic listing)."""
     import pyspark.sql.types as T
 
-    from cicevse2024_tfm_datapipeline_spark.sources.readers import _nano_ts_columns, load_table
+    from cicevse2024_tfm_datapipeline_spark.sources.readers import _table_meta, load_table
 
-    nano = set(_nano_ts_columns(os.path.join(sf_dir, "events.parquet")))
+    nano = set(_table_meta(os.path.join(sf_dir, "events.parquet")).nano_cols)
     schema = load_table(spark, sf_dir, "events").schema
     micro = {
         f.name

@@ -261,18 +261,12 @@ def a_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     grp = s.groupBy("v").agg(
         F.count(F.lit(1)).alias("cnt"), F.sum("is_a").alias("cnt_a")
     )
-    # r12: fixed-bounds scan over the footer-bracketed value grid (the
-    # weighted-median discipline) — no pinned range exchange, no sampler
-    # job, no checkpoint planning pass; grid values shift bucket balance
-    # only, never results
-    from cicevse2024_tfm_datapipeline_spark.operators.scan import uniform_grid
-    from cicevse2024_tfm_datapipeline_spark.sources.readers import (
-        table_column_minmax,
-    )
+    # fixed-bounds scan over the footer grid of value (the
+    # weighted-median discipline): no pinned range exchange, no sampler
+    # job, no checkpoint planning pass
+    from cicevse2024_tfm_datapipeline_spark.operators.scan import footer_grid
 
-    lo, hi = table_column_minmax(sf_dir, "events", "value")
-    n_b = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    grid = uniform_grid(float(lo) * 10000.0, float(hi) * 10000.0, n_b)
+    grid = footer_grid(spark, sf_dir, "events", "value", 10000.0)
     scanned = global_cumsum(
         grp, ["v"], ["cnt"], bucketing="bounds", fixed_bounds=grid
     ).withColumn(

@@ -147,17 +147,12 @@ def a_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r5/mann-whitney discipline: grid sets balance only, never
     # results), removing the inner pinned range exchange + sampler; the
     # machinery branches re-read the PINNED b frame, not the corpus
-    from cicevse2024_tfm_datapipeline_spark.operators.scan import uniform_grid
-    from cicevse2024_tfm_datapipeline_spark.sources.readers import (
-        table_column_minmax,
-    )
+    from cicevse2024_tfm_datapipeline_spark.operators.scan import footer_grid
 
-    _lo, _hi = table_column_minmax(sf_dir, "events", "value")
-    _nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cum = global_cumsum(
         cnt, ["tick"], ["cnt"], with_totals=True,
         bucketing="bounds",
-        fixed_bounds=uniform_grid(float(_lo) * 10000.0, float(_hi) * 10000.0, _nb),
+        fixed_bounds=footer_grid(spark, sf_dir, "events", "value", 10000.0),
     )
     _n = F.col("tot_cnt")
     _q = F.floor(_n / F.lit(10))

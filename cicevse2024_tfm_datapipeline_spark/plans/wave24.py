@@ -353,16 +353,12 @@ def a_mutual_information_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r12: fixed-bounds ntile over the footer-bracketed floor(value)
     # grid — direct-scan input, literal grid, no pin (r5 discipline)
-    from cicevse2024_tfm_datapipeline_spark.operators.scan import uniform_grid
-    from cicevse2024_tfm_datapipeline_spark.sources.readers import (
-        table_column_minmax,
-    )
+    from cicevse2024_tfm_datapipeline_spark.operators.scan import footer_grid
 
-    lo, hi = table_column_minmax(sf_dir, "events", "value")
-    n_b = int(spark.conf.get("spark.sql.shuffle.partitions"))
     tiled = global_ntile(
         ev, ["x", "event_id"], 10, out_col="d",
-        bucketing="bounds", fixed_bounds=uniform_grid(lo, hi, n_b),
+        bucketing="bounds",
+        fixed_bounds=footer_grid(spark, sf_dir, "events", "value"),
     )
     joint = tiled.groupBy("event_type", "d").agg(
         F.count(F.lit(1)).cast("long").alias("n_ed")

@@ -192,16 +192,12 @@ def f_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: fixed-bounds scan over the footer-bracketed n_chars grid —
     # direct-scan input, literal grid, no pin (r5 discipline; heavy
     # n_chars ties land whole in one bucket, which only skews balance)
-    from cicevse2024_tfm_datapipeline_spark.operators.scan import uniform_grid
-    from cicevse2024_tfm_datapipeline_spark.sources.readers import (
-        table_column_minmax,
-    )
+    from cicevse2024_tfm_datapipeline_spark.operators.scan import footer_grid
 
-    _lo, _hi = table_column_minmax(sf_dir, "documents", "n_chars")
-    _nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
     glob = global_row_number(
         docs, ["n_chars", "doc_id"], "g",
-        bucketing="bounds", fixed_bounds=uniform_grid(_lo, _hi, _nb),
+        bucketing="bounds",
+        fixed_bounds=footer_grid(spark, sf_dir, "documents", "n_chars"),
     ).select(
         F.col("n_chars").alias("norm_chars"), F.col("g").cast("long").alias("g")
     )

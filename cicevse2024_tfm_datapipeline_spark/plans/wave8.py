@@ -173,14 +173,9 @@ def a_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (TPC-H prices are near-uniform), never results; both machinery
     # branches re-read the map-side-combined grp aggregate, whose own
     # exchange is shared via ReuseExchange.
-    from cicevse2024_tfm_datapipeline_spark.operators.scan import uniform_grid
-    from cicevse2024_tfm_datapipeline_spark.sources.readers import (
-        table_column_minmax,
-    )
+    from cicevse2024_tfm_datapipeline_spark.operators.scan import footer_grid
 
-    lo, hi = table_column_minmax(sf_dir, "lineitem", "l_extendedprice")
-    n_b = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    grid = uniform_grid(float(lo) * 100.0, float(hi) * 100.0, n_b)
+    grid = footer_grid(spark, sf_dir, "lineitem", "l_extendedprice", 100.0)
     scanned = global_cumsum(
         grp, ["cents"], ["w"], with_totals=True,
         bucketing="bounds", fixed_bounds=grid,

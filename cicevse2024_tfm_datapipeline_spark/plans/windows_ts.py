@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from cicevse2024_tfm_datapipeline_spark.functions.encoders import category_codes, label_encode
 from cicevse2024_tfm_datapipeline_spark.operators.acf import acf
+from cicevse2024_tfm_datapipeline_spark.operators.scan import footer_grid
 from cicevse2024_tfm_datapipeline_spark.operators.sessionize import ttd_stats
 from cicevse2024_tfm_datapipeline_spark.operators.split import chrono_split
 from cicevse2024_tfm_datapipeline_spark.operators.topk import group_mode, top_k
@@ -267,26 +268,6 @@ def w5_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _w6_ts_grid(spark: SparkSession, sf_dir: str) -> list[float]:
-    """Uniform grid over the epoch-seconds scan key, bracketed by the
-    events.ts parquet footer statistics (naive datetimes — the NTZ key
-    is derived from calendar fields, i.e. epoch seconds of the naive
-    value, so (dt - epoch).total_seconds() is the same key)."""
-    import datetime as _dt
-
-    from cicevse2024_tfm_datapipeline_spark.operators.scan import uniform_grid
-    from cicevse2024_tfm_datapipeline_spark.sources.readers import (
-        table_column_minmax,
-    )
-
-    lo, hi = table_column_minmax(sf_dir, "events", "ts")
-    epoch = _dt.datetime(1970, 1, 1)
-    n_b = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return uniform_grid(
-        (lo - epoch).total_seconds(), (hi - epoch).total_seconds(), n_b
-    )
-
-
 @register(
     "w6_sessionize_ttd",
     oracle=f"""
@@ -361,7 +342,7 @@ def w6_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         # — a uniform grid over [key(min), key(max)] only sets bucket
         # balance (events are near-uniform in time), never results.
         bucketing="bounds",
-        fixed_bounds=_w6_ts_grid(spark, sf_dir),
+        fixed_bounds=footer_grid(spark, sf_dir, "events", "ts"),
     )
     return out.select(
         F.col("episodes_total").cast("long").alias("episodes_total"),

@@ -5,11 +5,19 @@ pushdown, column pruning and row-group skipping from Catalyst for free.
 CSV scans replicate the reference's ingest shapes (S1 power, S2 host
 positional, S3 multi-file with filename labels); JSON handles the artifact
 lake (S7).
+
+Everything read from a parquet table's footers (bytes, rows, row groups,
+nanosecond columns, per-column min/max) and the table's resolved scan
+plans live on one ``TableMeta`` per path, in the one module cache
+``_TABLE_META``.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,28 +29,6 @@ def table_names() -> tuple[str, ...]:
     return TABLE_NAMES
 
 
-def _nano_ts_columns(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark rejects them
-    unless read as long. Detected once per path from parquet footer
-    metadata (driver-side, no data scan)."""
-    if path in _NANO_CACHE:
-        return _NANO_CACHE[path]
-    cols: list[str] = []
-    try:
-        import pyarrow.parquet as pq
-
-        schema = pq.read_schema(path)
-        for field in schema:
-            if str(field.type) == "timestamp[ns]":
-                cols.append(field.name)
-    except Exception:  # noqa: BLE001 — fall back to plain read
-        pass
-    _NANO_CACHE[path] = cols
-    return cols
-
-
-_NANO_CACHE: dict[str, list[str]] = {}
-
 #: below this byte size a split-starved scan is left alone: the
 #: repartition's shuffle would cost more than the serial scan saves, and
 #: small frames are broadcast-join candidates where an extra exchange on
@@ -50,148 +36,147 @@ _NANO_CACHE: dict[str, list[str]] = {}
 #: unshuffled at every SF).
 _UNSTARVE_MIN_BYTES = 512 << 10
 
-#: keyed on (path, mtime_ns, size) so a regenerated scale-factor
-#: directory in a long-lived session invalidates naturally (r06 ADVICE:
-#: a plain path key kept serving the stale footer after a rewrite)
-_SPLIT_CACHE: dict[tuple[str, int, int], tuple[int, int]] = {}
+#: bound on the number of table paths ``_TABLE_META`` keeps
+_TABLE_META_MAX = 256
 
 
-def _footer_groups(f: str) -> int:
-    try:
-        import pyarrow.parquet as pq
+@dataclass
+class TableMeta:
+    """What the loader and the plans read from one parquet table's
+    footers — driver-side, no Spark job, filled in one pass over the
+    footers (``_table_meta``).
 
-        return pq.ParquetFile(f).metadata.num_row_groups
-    except Exception:  # noqa: BLE001 — treat as unsplittable
-        return 1
+    ``minmax[column]`` is ``None`` when any row group lacks min/max
+    statistics for the column (writers may omit them, e.g.
+    ``write_statistics=False`` or NaN-bearing doubles); ``rows`` is
+    ``None`` when a footer is unreadable. ``plans`` holds the resolved
+    scan DataFrames per ``(applicationId, wide)`` (see ``load_table``),
+    so a rewritten table, which gets a new entry, drops its stale plans."""
+
+    fingerprint: tuple[int, int, int]
+    bytes: int
+    rows: int | None
+    row_groups: int
+    nano_cols: list[str]
+    minmax: dict[str, tuple | None]
+    plans: dict[tuple[str, bool], DataFrame] = field(default_factory=dict)
 
 
-def _file_splits(path: str) -> tuple[int, int]:
-    """(byte size, parquet row-group count) from the footer — driver-side,
-    cached, no data scan. Row groups bound the scan's REAL parallelism:
-    Spark's byte-range splits assign each row group to the split holding
-    its midpoint, so a single-row-group file is one task no matter how
-    many splits planning creates.
+_TABLE_META: OrderedDict[str, TableMeta] = OrderedDict()
+_TABLE_META_LOCK = threading.Lock()
 
-    Handles both layouts: a single ``.parquet`` file (the synthetic
-    fixtures) and a directory-style dataset (the norm on real lakes —
-    sizes and row-group counts are summed over the part files; r06 ADVICE
-    flagged the silent ~4 KB-dirent no-op the single-file assumption
-    produced on directories)."""
-    st = os.stat(path)
-    if os.path.isdir(path):
-        parts = [
-            os.path.join(path, f)
-            for f in sorted(os.listdir(path))
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
+
+def _read_footers(parts: list[str], fingerprint: tuple[int, int, int]) -> TableMeta:
+    import pyarrow.parquet as pq
+
+    rows: int | None = 0
+    groups = 0
+    nano: list[str] = []
+    minmax: dict[str, tuple | None] = {}
+    for p in parts:
+        try:
+            # INT96 (Spark's default timestamp encoding) surfaces in arrow
+            # as timestamp[ns] unless coerced, but Spark reads it natively
+            with pq.ParquetFile(p, coerce_int96_timestamp_unit="us") as pf:
+                md, schema = pf.metadata, pf.schema_arrow
+        except Exception:  # noqa: BLE001 — one row group, no nano columns
+            rows, groups = None, groups + 1
+            continue
+        if rows is not None:
+            rows += md.num_rows
+        groups += md.num_row_groups
+        # parquet TIMESTAMP(NANOS): Spark rejects these unless read as long
+        nano += [
+            f.name for f in schema if str(f.type) == "timestamp[ns]" and f.name not in nano
         ]
-        # key on the PART files' own (mtime_ns, size) — a part rewritten
-        # in place (open/truncate, same name) changes neither the
-        # directory's mtime nor its size, so a dir-level key would serve
-        # a stale footer count (r07 ADVICE). A part can vanish between
-        # listdir and stat (a concurrent Spark overwrite swapping part
-        # files) — skip it rather than fail the read; the next call
-        # re-lists and re-keys anyway (r08 ADVICE).
-        stats = []
-        surviving = []
-        for p in parts:
-            try:
-                stats.append(os.stat(p))
-                surviving.append(p)
-            except FileNotFoundError:
-                continue
-        parts = surviving
-        key = (
-            path,
-            max((s.st_mtime_ns for s in stats), default=st.st_mtime_ns),
-            sum(s.st_size for s in stats),
-            len(parts),
-        )
-        if key not in _SPLIT_CACHE:
-            size = sum(s.st_size for s in stats)
-            groups = sum(_footer_groups(p) for p in parts) if parts else 1
-            _SPLIT_CACHE[key] = (size, max(1, groups))
-        return _SPLIT_CACHE[key]
-    key = (path, st.st_mtime_ns, st.st_size)
-    if key not in _SPLIT_CACHE:
-        _SPLIT_CACHE[key] = (st.st_size, max(1, _footer_groups(path)))
-    return _SPLIT_CACHE[key]
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            for j in range(rg.num_columns):
+                col = rg.column(j)
+                name, st = col.path_in_schema, col.statistics
+                if st is None or not st.has_min_max:
+                    minmax[name] = None
+                elif name not in minmax:
+                    minmax[name] = (st.min, st.max)
+                elif minmax[name] is not None:
+                    lo, hi = minmax[name]
+                    minmax[name] = (min(lo, st.min), max(hi, st.max))
+    if rows is None:  # an unreadable part leaves the other parts' bracket partial
+        minmax = {}
+    return TableMeta(fingerprint, fingerprint[1], rows, max(1, groups), nano, minmax)
 
 
-_ROW_COUNT_CACHE: dict[tuple, int] = {}
+def _table_meta(path: str) -> TableMeta:
+    """The ``TableMeta`` of a parquet file or dataset directory.
+
+    Each call lists the parts once and stats them once for the
+    fingerprint (max mtime_ns, total bytes, part count); only a changed
+    fingerprint re-reads the footers. Directories are fingerprinted per
+    part, since a part rewritten in place (same name) changes neither the
+    directory's mtime nor its size. Members starting with ``.`` or ``_``
+    (``_SUCCESS``, ``.crc``) are skipped, and so is a part that vanishes
+    between listdir and stat (a concurrent overwrite swapping part files;
+    the next call re-lists anyway). Entries are kept per path, least
+    recently used first out past ``_TABLE_META_MAX`` paths."""
+    if os.path.isdir(path):
+        stats = {}
+        for f in sorted(os.listdir(path)):
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                p = os.path.join(path, f)
+                try:
+                    stats[p] = os.stat(p)
+                except FileNotFoundError:
+                    continue
+    else:
+        stats = {path: os.stat(path)}
+    fingerprint = (
+        max((s.st_mtime_ns for s in stats.values()), default=0),
+        sum(s.st_size for s in stats.values()),
+        len(stats),
+    )
+    with _TABLE_META_LOCK:
+        meta = _TABLE_META.get(path)
+        if meta is None or meta.fingerprint != fingerprint:
+            meta = _TABLE_META[path] = _read_footers(list(stats), fingerprint)
+        _TABLE_META.move_to_end(path)
+        if len(_TABLE_META) > _TABLE_META_MAX:
+            _TABLE_META.popitem(last=False)
+    return meta
 
 
 def table_row_count(sf_dir: str, name: str) -> int:
     """EXACT row count of a synthetic table from parquet footer metadata —
-    driver-side, no Spark job (r11 optimization round, guide §5). Parquet
-    footers carry the exact row count, so this equals ``count()`` on the
-    unfiltered scan at any scale while scheduling zero tasks; at 100 TB
-    the count() it replaces is a full metadata-scan job over every file.
-    Cached on the same (mtime, size) fingerprint as the plan cache."""
-    import pyarrow.parquet as pq
-
+    driver-side, no Spark job. Parquet footers carry the exact row count,
+    so this equals ``count()`` on the unfiltered scan at any scale while
+    scheduling zero tasks; at 100 TB the count() it replaces is a full
+    metadata-scan job over every file."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (path, *_dataset_fingerprint(path))
-    if key not in _ROW_COUNT_CACHE:
-        if os.path.isdir(path):
-            total = 0
-            for f in sorted(os.listdir(path)):
-                if f.endswith(".parquet") and not f.startswith((".", "_")):
-                    total += pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-            _ROW_COUNT_CACHE[key] = total
-        else:
-            _ROW_COUNT_CACHE[key] = pq.ParquetFile(path).metadata.num_rows
-    return _ROW_COUNT_CACHE[key]
+    rows = _table_meta(path).rows
+    if rows is None:
+        raise ValueError(f"unreadable parquet footer under {path}")
+    return rows
 
 
-_COL_MINMAX_CACHE: dict[tuple, tuple] = {}
-
-
-def table_column_minmax(sf_dir: str, name: str, column: str) -> tuple:
+def table_column_minmax(sf_dir: str, name: str, column: str) -> tuple | None:
     """EXACT (min, max) of one column from parquet footer statistics —
-    driver-side, no Spark job (r12, the table_row_count discipline: an
-    input-table property read from metadata, fingerprint-cached). Raises
-    if any row group lacks stats for the column; callers use this only
+    driver-side, no Spark job — or ``None`` when any row group lacks
+    statistics for it (or a footer is unreadable). Callers use this only
     to size literal bucket grids, where correctness never depends on the
-    values (a wrong grid skews bucket balance, not results)."""
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (path, column, *_dataset_fingerprint(path))
-    if key not in _COL_MINMAX_CACHE:
-        files = (
-            [
-                os.path.join(path, f)
-                for f in sorted(os.listdir(path))
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            ]
-            if os.path.isdir(path)
-            else [path]
-        )
-        lo = hi = None
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            idx = md.schema.names.index(column)
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    raise ValueError(
-                        f"no parquet min/max statistics for {name}.{column}"
-                    )
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-        if lo is None:
-            raise ValueError(f"no row groups in {path}")
-        _COL_MINMAX_CACHE[key] = (lo, hi)
-    return _COL_MINMAX_CACHE[key]
+    values (a wrong grid skews bucket balance, not results), and take
+    their grid-less path on ``None``."""
+    return _table_meta(os.path.join(sf_dir, f"{name}.parquet")).minmax.get(column)
 
 
-def _unstarve(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+def _unstarve(spark: SparkSession, df: DataFrame, meta: TableMeta) -> DataFrame:
     """Split-starved-scan mitigation: when the parquet layout physically
     caps scan parallelism far below the cluster (single-file single-
     row-group inputs — the synthetic tables are exactly this), add one
     round-robin repartition so a CPU-DENSE narrow stage (shingle
     explosion, per-pair verification) runs wide instead of serializing
-    into one task.
+    into one task. Row groups bound the scan's REAL parallelism: Spark's
+    byte-range splits assign each row group to the split holding its
+    midpoint, so a single-row-group file is one task no matter how many
+    splits planning creates.
 
     OPT-IN per query (``load_table(..., wide=True)``), never the loader
     default: the A/B on the 58-query bench showed it is a tradeoff, not a
@@ -205,50 +190,12 @@ def _unstarve(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     production scale a 100 TB table yields thousands of row-group splits
     and this is a provable no-op — the branch exists for the long tail
     of small/badly-written files, which real lakes are full of too."""
-    size, groups = _file_splits(path)
-    if size < _UNSTARVE_MIN_BYTES:
+    if meta.bytes < _UNSTARVE_MIN_BYTES:
         return df
     target = spark.sparkContext.defaultParallelism
-    if groups >= max(2, target // 2):
+    if meta.row_groups >= max(2, target // 2):
         return df
     return df.repartition(target)
-
-
-#: analyzed-plan cache for the base table scans (r11 optimization round,
-#: guide §5 — the driver should do almost no work). Every ``load_table``
-#: call used to pay the full JVM DataSource resolution again (file
-#: listing, parquet footer schema inference, the nano-timestamp
-#: withColumn analysis): measured ~0.15-0.3 s per call driver-side, with
-#: ~100+ calls across the 58-query bench roster — a double-digit share
-#: of the whole bench on pure plan re-construction. A DataFrame is an
-#: immutable logical plan, NOT data: caching the object reuses the
-#: resolved scan plan while every action still computes from parquet
-#: (nothing is persisted — no .cache(), no materialization; the rules'
-#: no-result-caching line is about results, and this holds none).
-#: Keyed on the session's applicationId (a restarted session gets fresh
-#: JVM refs) and the dataset fingerprint (file/dir mtime+size, the
-#: _SPLIT_CACHE discipline) so a rewritten table invalidates naturally.
-_TABLE_PLAN_CACHE: dict[tuple, DataFrame] = {}
-_TABLE_PLAN_CACHE_MAX = 256
-
-
-def _dataset_fingerprint(path: str) -> tuple[int, int]:
-    """(max mtime_ns, total byte size) of a parquet file or dataset dir —
-    part-file granularity for directories (dir mtime misses in-place part
-    rewrites, the r07 ADVICE case)."""
-    st = os.stat(path)
-    if os.path.isdir(path):
-        mt, size = st.st_mtime_ns, 0
-        for f in os.listdir(path):
-            if f.endswith(".parquet") and not f.startswith((".", "_")):
-                try:
-                    ps = os.stat(os.path.join(path, f))
-                except FileNotFoundError:
-                    continue
-                mt = max(mt, ps.st_mtime_ns)
-                size += ps.st_size
-        return (mt, size)
-    return (st.st_mtime_ns, st.st_size)
 
 
 def load_table(
@@ -265,12 +212,16 @@ def load_table(
     above 2^53 nanos), matching how micro-resolution engines (e.g. DuckDB)
     ingest TIMESTAMP_NS.
 
-    The resolved scan DataFrame is cached per (session, dataset
-    fingerprint) — see ``_TABLE_PLAN_CACHE``. Consequence: two
-    ``load_table`` calls for the same table now return the SAME plan
-    object, so joins between them are shared-lineage self-joins (Spark's
-    DeduplicateRelations handles these; the full oracle gate re-ran green
-    over all 340 queries after this change).
+    The resolved scan DataFrame is kept on the table's ``TableMeta`` per
+    (session applicationId, ``wide``): every call used to pay the full
+    JVM DataSource resolution again (file listing, footer schema
+    inference, the nano-timestamp withColumn analysis), ~0.15-0.3 s per
+    call driver-side. A DataFrame is an immutable logical plan, NOT data:
+    every action still computes from parquet (no .cache(), nothing
+    persisted), and a rewritten table invalidates with its fingerprint.
+    Consequence: two ``load_table`` calls for the same table return the
+    SAME plan object, so joins between them are shared-lineage self-joins
+    (Spark's DeduplicateRelations handles these).
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     # the driver may hand us ITS session: pin the runtime-settable confs
@@ -278,25 +229,16 @@ def load_table(
     # naive timestamps). Runs on every call, cache hit or not (~1 ms,
     # idempotent) so a caller that reset the timezone is always re-pinned.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = (
-        spark.sparkContext.applicationId,
-        path,
-        wide,
-        *_dataset_fingerprint(path),
-    )
-    hit = _TABLE_PLAN_CACHE.get(key)
-    if hit is not None:
-        return hit
-    nano_cols = _nano_ts_columns(path)
-    if nano_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in nano_cols:
-        df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
-    df = _unstarve(spark, df, path) if wide else df
-    if len(_TABLE_PLAN_CACHE) >= _TABLE_PLAN_CACHE_MAX:
-        _TABLE_PLAN_CACHE.clear()
-    _TABLE_PLAN_CACHE[key] = df
+    meta = _table_meta(path)
+    key = (spark.sparkContext.applicationId, wide)
+    df = meta.plans.get(key)
+    if df is None:
+        if meta.nano_cols:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.parquet(path)
+        for c in meta.nano_cols:
+            df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
+        df = meta.plans[key] = _unstarve(spark, df, meta) if wide else df
     return df
 
 

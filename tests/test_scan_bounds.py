@@ -448,3 +448,28 @@ def test_grouped_cumsum_bounds_equals_pinned(spark, descending):
         for r in grouped_cumsum(df, bucketing="bounds", **kw).collect()
     }
     assert pinned == bounds
+
+
+@pytest.mark.parametrize(
+    "table,column,scale",
+    [("events", "ts", 1.0), ("events", "value", 10000.0), ("documents", "doc_id", 1.0)],
+)
+def test_footer_grid_brackets_the_bucketing_key(spark, table, column, scale):
+    """footer_grid spans [min, max] of the key bounds_bucketed actually
+    compares — timestamps in the epoch seconds _bounds_key_expr derives,
+    scaled keys times ``scale`` — one bucket per shuffle partition."""
+    from cicevse2024_tfm_datapipeline_spark.operators.scan import (
+        _bounds_key_expr,
+        footer_grid,
+        uniform_grid,
+    )
+    from cicevse2024_tfm_datapipeline_spark.sources.readers import load_table
+
+    sf = "/root/testdata/sf0.001"
+    df = load_table(spark, sf, table)
+    key = _bounds_key_expr(df, column) * F.lit(scale)
+    lo, hi = df.agg(F.min(key), F.max(key)).first()
+    n_b = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    grid = footer_grid(spark, sf, table, column, scale)
+    assert len(grid) == n_b - 1
+    assert grid == pytest.approx(uniform_grid(lo, hi, n_b), rel=1e-12)

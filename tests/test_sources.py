@@ -171,3 +171,114 @@ def test_table_row_count_matches_spark_count(spark):
     for name in ("region", "events", "embeddings"):
         exact = readers.load_table(spark, "/root/testdata/sf0.001", name).count()
         assert readers.table_row_count("/root/testdata/sf0.001", name) == exact
+
+
+def test_load_table_sees_nano_to_micro_rewrite(spark, tmp_path):
+    """A table rewritten in place from TIMESTAMP(NANOS) to micros must
+    load with the NEW layout: the nanosecond-column list belongs to the
+    table's fingerprinted metadata, not to its path (a path-keyed list
+    kept converting the micros column with ``div 1000`` and failed)."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from cicevse2024_tfm_datapipeline_spark.sources import readers
+
+    p = tmp_path / "stamps.parquet"
+    ts = [datetime.datetime(2024, 1, 1, 0, 0, i, 250000 * i) for i in range(4)]
+    epoch = datetime.datetime(1970, 1, 1)
+    want = [(t - epoch) // datetime.timedelta(microseconds=1) for t in ts]
+
+    def loaded():
+        df = readers.load_table(spark, str(tmp_path), "stamps")
+        micros = F.unix_micros(F.col("ts").cast("timestamp"))  # session zone is UTC
+        return [r[0] for r in df.orderBy("id").select(micros).collect()]
+
+    pq.write_table(
+        pa.table({"id": list(range(4)), "ts": pa.array(ts, pa.timestamp("ns"))}), p
+    )
+    assert loaded() == want
+    before = p.stat().st_mtime_ns
+    pq.write_table(
+        pa.table({"id": list(range(4)), "ts": pa.array(ts, pa.timestamp("us"))}), p
+    )
+    os.utime(p, ns=(before + 10**9,) * 2)
+    assert loaded() == want
+
+
+def test_table_meta_evicts_oldest_first(tmp_path, monkeypatch):
+    """Past the bound the least recently used path is evicted, one at a
+    time — not a wholesale clear of every table's metadata and plans."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cicevse2024_tfm_datapipeline_spark.sources import readers
+
+    monkeypatch.setattr(readers, "_TABLE_META_MAX", 3)
+    monkeypatch.setattr(readers, "_TABLE_META", readers.OrderedDict())
+    paths = []
+    for i in range(5):
+        p = str(tmp_path / f"t{i}.parquet")
+        pq.write_table(pa.table({"a": [i]}), p)
+        paths.append(p)
+    for p in paths[:3]:
+        readers._table_meta(p)
+    kept = readers._table_meta(paths[0])  # touch: t0 is now the newest
+    readers._table_meta(paths[3])
+    assert list(readers._TABLE_META) == [paths[2], paths[0], paths[3]]
+    assert readers._table_meta(paths[0]) is kept
+    readers._table_meta(paths[4])
+    assert list(readers._TABLE_META) == [paths[3], paths[0], paths[4]]
+
+
+def test_footer_metadata_read_once_per_table(spark, tmp_path, monkeypatch):
+    """load_table, table_row_count and table_column_minmax on one table
+    share one footer pass: each part's footer is opened exactly once."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from cicevse2024_tfm_datapipeline_spark.sources import readers
+
+    ds = tmp_path / "events.parquet"
+    ds.mkdir()
+    shutil.copyfile("/root/testdata/sf0.001/events.parquet", ds / "part-00000.parquet")
+    shutil.copyfile("/root/testdata/sf0.001/events.parquet", ds / "part-00001.parquet")
+    (ds / "_SUCCESS").touch()
+    opened = []
+    real = pq.ParquetFile
+
+    def counting(path, *a, **k):
+        opened.append(os.path.basename(str(path)))
+        return real(path, *a, **k)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    sf = str(tmp_path)
+    readers.load_table(spark, sf, "events", wide=True)
+    n = readers.table_row_count(sf, "events")
+    lo, hi = readers.table_column_minmax(sf, "events", "event_id")
+    readers.table_column_minmax(sf, "events", "value")
+    assert sorted(opened) == ["part-00000.parquet", "part-00001.parquet"]
+    one = readers.table_row_count("/root/testdata/sf0.001", "events")
+    assert n == 2 * one
+    assert (lo, hi) == readers.table_column_minmax("/root/testdata/sf0.001", "events", "event_id")
+
+
+def test_minmax_none_when_one_part_lacks_statistics(tmp_path):
+    """A dataset whose parts disagree (one written with statistics, one
+    without) has no usable bracket: table_column_minmax gives None
+    instead of raising, while the row count still sums every part."""
+    import pyarrow.parquet as pq
+
+    from cicevse2024_tfm_datapipeline_spark.sources import readers
+
+    ds = tmp_path / "documents.parquet"
+    ds.mkdir()
+    docs = pq.read_table("/root/testdata/sf0.001/documents.parquet")
+    pq.write_table(docs, ds / "part-00000.parquet")
+    pq.write_table(docs, ds / "part-00001.parquet", write_statistics=False)
+    sf = str(tmp_path)
+    assert readers.table_column_minmax(sf, "documents", "doc_id") is None
+    assert readers.table_row_count(sf, "documents") == 2 * len(docs)

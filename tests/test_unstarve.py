@@ -62,36 +62,36 @@ def test_wide_noop_when_layout_already_splits(spark, tmp_path):
     )
     path = os.path.join(tmp_path, "multi.parquet")
     pq.write_table(tbl, path, row_group_size=rows_per, compression="none")
-    size, groups = readers._file_splits(path)
-    assert groups == n_groups
-    assert size >= readers._UNSTARVE_MIN_BYTES, "fixture must cross the floor"
+    meta = readers._table_meta(path)
+    assert meta.row_groups == n_groups
+    assert meta.bytes >= readers._UNSTARVE_MIN_BYTES, "fixture must cross the floor"
     df = spark.read.parquet(path)
-    out = readers._unstarve(spark, df, path)
+    out = readers._unstarve(spark, df, meta)
     assert out is df  # identical object — no repartition node added
 
 
-def test_file_splits_cached_until_file_changes(tmp_path):
-    """_file_splits caches per (path, mtime, size) — repeat calls reuse
-    the footer read, but regenerating the file (same path, new content)
-    invalidates (r06 ADVICE: a plain path key served stale footers after
-    a testdata rewrite in a long-lived session)."""
+def test_table_meta_cached_until_file_changes(tmp_path):
+    """_table_meta caches per path and fingerprint (mtime, size, parts) —
+    repeat calls reuse the footer read, but regenerating the file (same
+    path, new content) invalidates (r06 ADVICE: a plain path key served
+    stale footers after a testdata rewrite in a long-lived session)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     path = os.path.join(tmp_path, "probe.parquet")
     pq.write_table(pa.table({"a": [1, 2, 3]}), path)
-    first = readers._file_splits(path)
-    assert first[1] == 1
-    assert readers._file_splits(path) == first  # cache hit
+    first = readers._table_meta(path)
+    assert first.row_groups == 1
+    assert readers._table_meta(path) is first  # cache hit
     # regenerate with 3 row groups (and force a distinct mtime/size)
     pq.write_table(pa.table({"a": list(range(300))}), path, row_group_size=100)
     os.utime(path, ns=(1, 1))
-    size2, groups2 = readers._file_splits(path)
-    assert groups2 == 3
-    assert size2 == os.path.getsize(path)
+    second = readers._table_meta(path)
+    assert second.row_groups == 3
+    assert second.bytes == os.path.getsize(path)
 
 
-def test_file_splits_directory_dataset(tmp_path):
+def test_table_meta_directory_dataset(tmp_path):
     """Directory-style parquet datasets (the norm on real lakes) must sum
     part-file sizes and row groups instead of silently no-oping on the
     dirent size (r06 ADVICE item 1)."""
@@ -107,14 +107,15 @@ def test_file_splits_directory_dataset(tmp_path):
             row_group_size=100,
         )
     open(os.path.join(ds, "_SUCCESS"), "w").close()  # marker must be skipped
-    size, groups = readers._file_splits(ds)
-    assert groups == 8  # 4 parts x 2 row groups
+    meta = readers._table_meta(ds)
+    assert meta.row_groups == 8  # 4 parts x 2 row groups
+    assert meta.rows == 800
     expected_size = sum(
         os.path.getsize(os.path.join(ds, f))
         for f in os.listdir(ds)
         if f.endswith(".parquet")
     )
-    assert size == expected_size
+    assert meta.bytes == expected_size
 
 
 def test_directory_cache_sees_in_place_part_rewrite(tmp_path):
@@ -129,8 +130,7 @@ def test_directory_cache_sees_in_place_part_rewrite(tmp_path):
     os.makedirs(ds)
     part = os.path.join(ds, "part-00000.parquet")
     pq.write_table(pa.table({"a": list(range(200))}), part, row_group_size=200)
-    _, groups1 = readers._file_splits(ds)
-    assert groups1 == 1
+    assert readers._table_meta(ds).row_groups == 1
     dir_stat_before = os.stat(ds)
     # same table, same compression, finer row groups; same part name —
     # byte size may coincide, so force the mtime forward to model a real
@@ -138,8 +138,7 @@ def test_directory_cache_sees_in_place_part_rewrite(tmp_path):
     pq.write_table(pa.table({"a": list(range(200))}), part, row_group_size=50)
     os.utime(part, ns=(dir_stat_before.st_mtime_ns + 10**9,) * 2)
     os.utime(ds, ns=(dir_stat_before.st_mtime_ns, dir_stat_before.st_mtime_ns))
-    _, groups2 = readers._file_splits(ds)
-    assert groups2 == 4
+    assert readers._table_meta(ds).row_groups == 4
 
 
 def test_wide_load_values_identical(spark):
