@@ -46,6 +46,17 @@ def _split_schema(schema: str) -> list[tuple[str, str]]:
     return fields
 
 
+def _sql_str(s: str) -> str:
+    """A Spark SQL string expression for ``s`` that parses the same under
+    either ``spark.sql.parser.escapedStringLiterals`` setting: a quoted
+    literal when ``s`` has no quote or backslash (the only characters the
+    setting reads differently), else its UTF-8 bytes as a hex binary
+    literal cast to string (foldable, as ``named_struct`` names must be)."""
+    if "'" not in s and "\\" not in s:
+        return f"'{s}'"
+    return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
+
+
 def _sql_scalar(v, typ: str) -> str:
     """Render one Python value as a Spark SQL literal of ``typ`` —
     bit-exact for doubles (repr is the shortest round-trip string and
@@ -68,8 +79,7 @@ def _sql_scalar(v, typ: str) -> str:
         return f"CAST({r}D AS {typ})"
     if isinstance(v, int):
         return f"CAST({int(v)}L AS {typ})"
-    s = str(v).replace("\\", "\\\\").replace("'", "\\'")
-    return f"CAST('{s}' AS {typ})"
+    return f"CAST({_sql_str(str(v))} AS {typ})"
 
 
 def literal_array_expr(rows: Sequence[Sequence], fields: Sequence[tuple[str, str]]) -> str:
@@ -82,7 +92,7 @@ def literal_array_expr(rows: Sequence[Sequence], fields: Sequence[tuple[str, str
     for row in rows:
         parts = []
         for v, (name, typ) in zip(row, fields):
-            parts.append(f"'{name}', {_sql_scalar(v, typ)}")
+            parts.append(f"{_sql_str(name)}, {_sql_scalar(v, typ)}")
         structs.append(f"named_struct({', '.join(parts)})")
     return f"array({', '.join(structs)})"
 

@@ -189,7 +189,7 @@ def permute_feature_hash(
     # the within-bucket window applies the full total order — so:
     # - id side: a uniform grid over [min_id, max_id] from ``id_bounds``
     #   (callers pass footer-metadata min/max — an input-table property,
-    #   like the SRP ladder width);
+    #   like the SRP ladder width; ``None`` gives the pinned scan);
     # - key side: md5-hex is uniform by construction, so a uniform grid
     #   over the 32-bit integer value of the FIRST 8 hex chars is
     #   perfectly balanced at any corpus size. ``__pknum`` (that prefix
@@ -202,20 +202,14 @@ def permute_feature_hash(
     n_buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     key_grid = uniform_grid(0.0, 4294967296.0, n_buckets)
     pknum = F.conv(F.substring(F.col("__pk"), 1, 8), 16, 10).cast("long")
-    if id_bounds is not None:
-        id_grid = uniform_grid(id_bounds[0], id_bounds[1], n_buckets)
-        rows = global_row_number(
-            df, [id_col], "__slot", bucketing="bounds", fixed_bounds=id_grid
-        )
-    else:
-        rows = global_row_number(df, [id_col], "__slot")
+    id_grid = None if id_bounds is None else uniform_grid(*id_bounds, n_buckets)
+    rows = global_row_number(df, [id_col], "__slot", fixed_bounds=id_grid)
     vals = global_row_number(
         df.select(F.col(value_col).alias("__pv"), F.col(id_col).alias("__vid"))
         .withColumn("__pk", key)
         .withColumn("__pknum", pknum),
         ["__pknum", "__pk", "__vid"],
         "__slot",
-        bucketing="bounds",
         fixed_bounds=key_grid,
     ).select("__slot", "__pv")
     return (

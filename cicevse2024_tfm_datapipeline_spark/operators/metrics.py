@@ -156,28 +156,18 @@ def _threshold_cum_counts(
     ``domain_bounds``: a literal bucket-boundary grid the caller derives
     from CONSTRUCTION knowledge of the score domain (e.g. a 3-decimal
     rounding of a bounded ratio — the binary twin of
-    ``ovr_auc_per_class``'s ``bounded_curves``). The scan then skips the
-    driver-side quantile pre-pass, which the round-10 profile measured
-    as ~0.3 s of the watch item's ~0.35 s constant on a 900-row
-    domain-bounded frame (SCALE.md "A13 profile") — the grid literals
-    give the same monotone bucketing with zero jobs. Leave None for
-    continuous/unknown-domain scores, where equal-population quantile
-    bounds are the only safe bucketing.
+    ``ovr_auc_per_class``'s ``bounded_curves``). It is the scan's
+    ``fixed_bounds``: the lineage-free bounds bucketing, no pin and no
+    sampling job (SCALE.md "A13 profile"). Leave None for
+    continuous/unknown-domain scores: the scan then takes the pinned
+    range exchange, which splits heavy score ties across buckets and
+    measured faster locally than the former quantile-bound pre-pass
+    (SCALE.md "A13 checkpoint cost").
 
     Scale shape: with continuous double scores |distinct scores| ≈ |rows|,
     so the cumulative sums run through operators.scan.global_cumsum — the
     two-phase range-partitioned prefix sum — instead of a single-task
     unpartitioned window. Grand totals are a 1-row broadcast cross-join.
-
-    Bucketing mode (flipped round 9, the staged r08 note): the
-    lineage-free ``bounds`` mapping — the scan key is a high-cardinality
-    double score (exactly the tie-skew-safe case), and the quantile-bound
-    expression removes the localCheckpoint pin (no persisted copy, full
-    lineage recovery). Measured trade (SCALE.md "A13 checkpoint cost"):
-    ~+0.07 s per query locally (the driver-side quantile job), a
-    constant; at scale the pinned alternative is a corpus-sized
-    lineage-cut storage copy, which is the thing that cannot survive a
-    100-TB run.
     """
     from cicevse2024_tfm_datapipeline_spark.operators.scan import global_cumsum
 
@@ -186,22 +176,18 @@ def _threshold_cum_counts(
         F.sum((F.col(y_true) == 0).cast("long")).alias("neg"),
         F.count(F.lit(1)).alias("cnt"),
     )
-    # deliberately NO persist/checkpoint on per_score: the quantile pass
-    # and the main job share the same exchange RDDs, so the agg's shuffle
-    # stage computes once and later jobs skip it (shuffle-stage reuse) —
-    # an explicit cache only added columnar-build overhead (paired A/B
-    # round 9: persist 1.20 s median vs plain 0.91 s), and in bounds
-    # mode every consumer is a deterministic expression, so nothing
-    # needs a frozen copy for correctness. Grand totals ride on the
-    # scan's own per-partition totals frame — no separate full
-    # aggregation pass over per_score.
+    # deliberately NO persist/checkpoint on per_score: an explicit cache
+    # only added columnar-build overhead (paired A/B round 9: persist
+    # 1.20 s median vs plain 0.91 s); with a grid every consumer is a
+    # deterministic expression, and without one the scan pins its own
+    # buckets. Grand totals ride on the scan's own per-partition totals
+    # frame — no separate full aggregation pass over per_score.
     return global_cumsum(
         per_score,
         ["threshold"],
         ["pos", "neg", "cnt"],
         descending=True,
         with_totals=True,
-        bucketing="bounds",
         fixed_bounds=domain_bounds,
     )
 
@@ -344,10 +330,6 @@ def _per_class_auc(
         # cap each class curve at the threshold-domain size, so the
         # plain class-partitioned window is the right plan at any scale
         small_groups=bounded_curves,
-        # unbounded curves take the lineage-free bounds scan (round 9):
-        # the order key is a double score and the group key is class-like
-        # (small) — exactly the case the bounds docstring blesses
-        bucketing="bounds",
     )
     # zero-pos/neg classes → null AUC/AP (sklearn NaN + warning)
     ok = (F.col("tot_neg") > 0) & (F.col("tot_pos") > 0)
@@ -420,17 +402,14 @@ def ovr_auc_summary(
     )
     # micro_domain_bounds (round 10): when the caller knows the score
     # DOMAIN by construction (same knowledge bounded_curves asserts for
-    # the macro side), literal grid bounds replace the micro scan's
-    # quantile pre-pass — the measured ~0.3 s flat driver job that a
-    # domain-bounded per-threshold frame never needs (SCALE.md "A13
-    # profile"); None keeps the quantile-bound lineage-free scan
+    # the macro side), the literal grid gives the lineage-free bounds
+    # scan (SCALE.md "A13 profile"); None gives the pinned range exchange
     mcum = global_cumsum(
         mper,
         ["threshold"],
         ["pos", "neg", "cnt"],
         descending=True,
         with_totals=True,
-        bucketing="bounds",
         fixed_bounds=micro_domain_bounds,
     )
     ok = (F.col("tot_neg") > 0) & (F.col("tot_pos") > 0)

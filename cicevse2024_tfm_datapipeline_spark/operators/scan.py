@@ -17,10 +17,21 @@ No unbounded-input unpartitioned window appears anywhere: the only
 cross-partition combine is over the partition-summary frame, whose size is
 the shuffle-partition count, via joins (not windows).
 
+Step 1 has two forms, and the caller's input picks one — there is no
+mode argument:
+
+  - a literal grid (``fixed_bounds``: :func:`footer_grid` over parquet
+    footer statistics, or a construction-known key domain) gives
+    :func:`bounds_bucketed` — PID is a pure expression over the grid, so
+    nothing is pinned and lineage stays whole;
+  - no grid (``None``) gives :func:`range_bucketed` — the pinned range
+    exchange, which samples its own bounds and splits tie groups.
+
 Used by operators/metrics.py (ROC/PR cumulative curves) and
 operators/sessionize.py (global gaps-and-islands) — the two places the
 reference's semantics genuinely demand a total order
-(func_aux/func_test.py:196-249, :429-458).
+(func_aux/func_test.py:196-249, :429-458) — and by sequential ingest ids
+(sources/readers.py).
 """
 
 from __future__ import annotations
@@ -249,25 +260,23 @@ def _bounds_key_expr(df: DataFrame, key: str) -> Column:
             + F.date_part(F.lit("SECOND"), col).cast("double")
         )
     raise TypeError(
-        f"bounds_bucketed: first order column {key!r} has type {dt} — the "
-        "quantile-bound bucketing is only order-consistent for numeric/"
-        "boolean/date/timestamp keys (a string key would bucket by numeric "
-        "cast but sort lexicographically). Use the pinned range exchange "
-        "(bucketing='pinned') for non-numeric scan keys."
+        f"bounds_bucketed: first order column {key!r} has type {dt} — "
+        "grid bucketing is only order-consistent for numeric/boolean/date/"
+        "timestamp keys (a string key would bucket by numeric cast but sort "
+        "lexicographically). Pass fixed_bounds=None for non-numeric scan "
+        "keys: the pinned range exchange."
     )
 
 
 def bounds_bucketed(
     df: DataFrame,
     order_cols: Sequence[str],
+    fixed_bounds: Sequence[float],
     descending: bool = False,
-    n_buckets: int | None = None,
-    relative_error: float = 1e-4,
-    fixed_bounds: Sequence[float] | None = None,
 ) -> DataFrame:
     """Lineage-free twin of :func:`range_bucketed`: ``PID`` is DERIVED
-    FROM THE DATA via driver-computed quantile bounds on the first order
-    column, instead of ``spark_partition_id()`` over a pinned range
+    FROM THE DATA via the caller's literal bucket-bound grid on the first
+    order column, instead of ``spark_partition_id()`` over a pinned range
     exchange.
 
     Why this exists (SCALE.md "Known local-vs-cluster deltas"): the
@@ -279,9 +288,22 @@ def bounds_bucketed(
     branch recomputes it bit-identically, exchange reuse is safe by
     construction, nothing is pinned, and recovery replays lineage.
 
-    Mechanics: ``B-1`` quantile bounds of ``order_cols[0]`` (cast to
-    double; one driver-side Greenwald–Khanna pass, the analogue of
-    RangePartitioner's sample job) are embedded as an array literal;
+    ``fixed_bounds`` is a grid the caller already has — parquet footer
+    statistics (:func:`footer_grid`) or construction knowledge of the key
+    domain (a 3-decimal score, a 32-bit hash prefix). Grid values only
+    set bucket BALANCE, never results: the grid may be unsorted,
+    duplicated, outside the data's range (out-of-range bounds only leave
+    empty buckets, which the offsets combine tolerates) or longer than
+    the shuffle-partition count B (thinned to B - 1 evenly spaced
+    bounds). Non-finite
+    entries are dropped: NaN is neither deduped by set() (NaN != NaN) nor
+    ordered by sorted(), so a NaN bound would waste buckets and, in desc
+    mode, shift every non-null PID. NaN KEYS still bucket correctly
+    without a NaN bound: Spark orders NaN above every double, so the
+    strict comparison sends them to the edge bucket on its own.
+
+    Mechanics: the bounds (compared against ``order_cols[0]`` cast to
+    double) are embedded as an array literal;
     ``PID = size(filter(bounds, b -> b < key))`` (``>`` for descending) —
     monotone in the scan order because strict comparison puts every tie
     group in ONE bucket, with the full multi-column ordering applied by
@@ -295,18 +317,10 @@ def bounds_bucketed(
     hypothesis differential on ``[None, 0.0]``, round 9).
 
     Tradeoff vs the pinned range exchange: tie groups cannot be SPLIT
-    across buckets, so a heavy-duplicate first order column skews bucket
-    sizes (the range exchange splits ties and disambiguates via physical
-    partition id). Use for high-cardinality scan keys — scores,
-    timestamps — which is exactly what the ROC/sessionize scans order
-    by.
-
-    ``fixed_bounds``: skip the quantile job entirely and bucket on the
-    caller's literal boundary grid — for keys whose DOMAIN is known by
-    construction (see global_cumsum's fixed_bounds note). Non-finite
-    entries are dropped (same reason as the quantile filter below); the
-    grid need not match the data range — out-of-range bounds only leave
-    empty buckets, which the offsets combine already tolerates."""
+    across buckets, so a heavy-duplicate first order column puts its
+    whole tie group in one bucket (the range exchange splits ties and
+    disambiguates via physical partition id). Results stay exact; only
+    the balance suffers."""
     # Materialize the key ONCE per row: the PID expression below embeds
     # the key inside a higher-order filter lambda, where it would be
     # re-evaluated PER BOUND (B-1 times per row — lambda bodies get no
@@ -318,31 +332,16 @@ def bounds_bucketed(
         raise ValueError("bounds_bucketed: input already has a __bb_key column")
     keyed = df.withColumn("__bb_key", _bounds_key_expr(df, order_cols[0]))
     keyc = F.col("__bb_key")
-    if fixed_bounds is not None:
-        # caller-provided DOMAIN grid (see global_cumsum's fixed_bounds
-        # note): no quantile job at all — the bounds are plan literals
-        # from construction knowledge, identical at every corpus size
-        bounds = sorted(
-            {float(x) for x in fixed_bounds if x is not None and math.isfinite(x)}
-        )
-        probs = []
-    else:
-        b = n_buckets or _n_range_parts(df)
-        probs = [i / b for i in range(1, b)]
-    if probs:
-        bounds = keyed.select("__bb_key").approxQuantile(
-            "__bb_key", probs, relative_error
-        )
-        # drop non-finite quantiles BEFORE dedup/sort (r09 ADVICE): NaN is
-        # neither deduped by set() (NaN != NaN) nor ordered by sorted(), so
-        # a NaN-bearing score column could embed duplicate NaN bounds —
-        # wasted buckets, and in desc mode every non-null PID would shift
-        # by the NaN-bound count. NaN keys still bucket correctly without
-        # a NaN bound: Spark orders NaN above every double, so the strict
-        # comparison sends them to the edge bucket on its own.
-        bounds = sorted({x for x in bounds if x is not None and math.isfinite(x)})
-    elif fixed_bounds is None:
-        bounds = []
+    bounds = sorted(
+        {float(x) for x in fixed_bounds if x is not None and math.isfinite(x)}
+    )
+    # at most one bucket per shuffle partition, as on the pinned path: the
+    # single-super-group shortcut of the prefix combine decides from the
+    # partition count B, so PIDs must stay within [0, B]
+    n_b = _n_range_parts(df)
+    if len(bounds) >= n_b:
+        bounds = [bounds[len(bounds) * i // n_b] for i in range(1, n_b)]
+
     def _arr_lit(vals: list[float]) -> Column:
         # one parsed expression instead of a py4j round trip per bound
         # (r12, guide §5); repr + D suffix parses to bit-identical doubles
@@ -387,7 +386,7 @@ def footer_grid(
     buckets timestamps in.
 
     Returns ``None`` when the footers lack statistics for the column;
-    ``fixed_bounds=None`` then takes the quantile-bounds path.
+    ``fixed_bounds=None`` then takes the pinned range exchange.
 
     The grid only brackets the key approximately: a key rounded after
     scaling (``floor(v*10000+0.5)``) can land one tick past the top
@@ -413,7 +412,6 @@ def global_cumsum(
     descending: bool = False,
     keep_pid: bool = False,
     with_totals: bool = False,
-    bucketing: str = "pinned",
     fixed_bounds: Sequence[float] | None = None,
 ) -> DataFrame:
     """Running sum of each ``sum_cols`` entry over the global
@@ -428,30 +426,21 @@ def global_cumsum(
     unboundedPreceding, 0))`` but with no unpartitioned window: per-range-
     partition cumsums plus broadcast prefix offsets.
 
-    Cost model: the bucketed frame is lazily checkpointed (see
-    ``_pin_buckets`` — required for correctness, not just speed), so the
-    input subtree executes once and every branch (window pass, totals,
-    offsets) reads the same materialized partitions; the data-sized
-    shuffle happens exactly once (the range exchange).
-
-    ``bucketing="bounds"`` swaps in :func:`bounds_bucketed` — the
-    lineage-free mapping (no pinned copy, no lineage cut; see its
-    docstring for the tie-skew tradeoff). Results are identical; the
-    plans differ in recovery/storage behavior.
-
-    ``fixed_bounds`` (bounds mode only) replaces the driver-side quantile
-    job with CALLER-PROVIDED literal bucket boundaries — the right move
-    when the first order column's DOMAIN is known by construction (e.g. a
-    score that is a 3-decimal rounding of a bounded ratio): the quantile
-    pre-pass measured ~0.3 s flat (SCALE.md "A13 profile", round 10) and
-    buys nothing a fixed grid over the known domain doesn't already give;
-    at any corpus size the same literals hold because the DOMAIN, not the
-    data, defines them. Bucket balance then tracks the score distribution
-    instead of equal-population quantiles — acceptable exactly when the
-    domain (hence per-bucket tie volume) is bounded.
+    ``fixed_bounds`` picks the bucketing (module docstring). A grid —
+    footer statistics or a construction-known key DOMAIN, e.g. a score
+    that is a 3-decimal rounding of a bounded ratio — gives
+    :func:`bounds_bucketed`: no pinned copy, no lineage cut, no sampling
+    job; the same literals hold at any corpus size because the domain,
+    not the data, defines them (see its docstring for the tie-skew
+    tradeoff). ``None`` gives the pinned range exchange: the bucketed
+    frame is lazily checkpointed (see ``_pin_buckets`` — required for
+    correctness, not just speed), so the input subtree executes once and
+    every branch (window pass, totals, offsets) reads the same
+    materialized partitions. Results are identical; the plans differ in
+    recovery/storage behavior.
     """
-    if bucketing == "bounds":
-        bucketed = bounds_bucketed(df, order_cols, descending, fixed_bounds=fixed_bounds)
+    if fixed_bounds is not None:
+        bucketed = bounds_bucketed(df, order_cols, fixed_bounds, descending)
     else:
         bucketed = range_bucketed(df, order_cols, descending)
     w = (
@@ -491,7 +480,6 @@ def grouped_cumsum(
     descending: bool = False,
     with_totals: bool = False,
     small_groups: bool = False,
-    bucketing: str = "pinned",
 ) -> DataFrame:
     """Per-group running sums over the global ``order_cols`` order WITHIN
     each group — ``F.sum(c).over(Window.partitionBy(group).orderBy(...))``
@@ -514,21 +502,8 @@ def grouped_cumsum(
     two-phase range machinery would only add cost. Never set it for
     data-sized groups: one giant group would serialize into one task.
 
-    ``bucketing="bounds"`` is the lineage-free mapping here too: buckets
-    come from :func:`bounds_bucketed` over the ORDER column alone
-    (ignoring the group key — global order bounds are monotone within
-    EVERY group's order, which is all the per-group prefix combine
-    needs; the group key is in every window spec / summary key already).
-    Nothing is pinned; the same tie-skew caveat as the global scan
-    applies to the order column. One sizing note: order-only buckets can
-    each hold every group, so the summary frame is O(B x |groups|) rows
-    instead of ~O(B) — fine for class-like group keys (the ROC tier),
-    wrong for high-cardinality groups, where the pinned (group, order)
-    range keeps the summary near-linear in B. Because of that blow-up
-    the bounds path does NOT force-broadcast the offsets/totals frames:
-    the planner (AQE) broadcasts them when they measure small and falls
-    back to a shuffle join when a high-cardinality group key makes them
-    data-sized, instead of OOMing the driver on a forced broadcast.
+    Otherwise the scan is the pinned (group, order) range exchange, which
+    keeps the summary frame near-linear in B at any group cardinality.
     """
     gcols = list(group_cols)
     if small_groups:
@@ -546,15 +521,12 @@ def grouped_cumsum(
                 "*", *[F.sum(c).over(wg).alias(f"tot_{c}") for c in sum_cols]
             )
         return out
-    if bucketing == "bounds":
-        bucketed = bounds_bucketed(df, order_cols, descending)
-    else:
-        rp = df.repartitionByRange(
-            _n_range_parts(df),
-            *[F.col(c).asc() for c in gcols],
-            *_ordering(order_cols, descending),
-        )
-        bucketed = _pin_buckets(rp.withColumn(PID, F.spark_partition_id()))
+    rp = df.repartitionByRange(
+        _n_range_parts(df),
+        *[F.col(c).asc() for c in gcols],
+        *_ordering(order_cols, descending),
+    )
+    bucketed = _pin_buckets(rp.withColumn(PID, F.spark_partition_id()))
     w = (
         W.partitionBy(PID, *gcols)
         .orderBy(*_ordering(order_cols, descending))
@@ -585,9 +557,8 @@ def grouped_cumsum(
         ],
     )
     if _n_range_parts(totals) < SUPER:
-        # single super-group (decidable at plan time; strict < for the
-        # bounds-mode PID domain [0, B]): the within-window prefix IS the
-        # full offset — skip the cross-super stages
+        # single super-group (decidable at plan time): the within-window
+        # prefix IS the full offset — skip the cross-super stages
         offs = within.select(
             PID,
             *gcols,
@@ -625,11 +596,7 @@ def grouped_cumsum(
                 ],
             )
         )
-    # forced broadcast only when the summary frame is ~O(B) by
-    # construction (pinned (group, order) range); the bounds path's
-    # O(B x |groups|) frame is left to the planner (docstring above)
-    maybe_bcast = (lambda f: f) if bucketing == "bounds" else F.broadcast
-    out = local.join(maybe_bcast(offs), [PID, *gcols])
+    out = local.join(F.broadcast(offs), [PID, *gcols])
     out = out.select(
         *df.columns,
         *[
@@ -641,7 +608,7 @@ def grouped_cumsum(
         grand = totals.groupBy(*gcols).agg(
             *[F.sum(f"__tot_{c}").alias(f"tot_{c}") for c in sum_cols]
         )
-        out = out.join(maybe_bcast(grand), gcols)
+        out = out.join(F.broadcast(grand), gcols)
     return out
 
 
@@ -650,19 +617,16 @@ def global_row_number(
     order_cols: Sequence[str],
     out_col: str = "__rn",
     descending: bool = False,
-    bucketing: str = "pinned",
     fixed_bounds: Sequence[float] | None = None,
 ) -> DataFrame:
     """Global 1-based row number over ``order_cols`` with no unpartitioned
     window — the two-phase scan over a constant-1 column. The order should
     be total (add a tiebreak column) for a deterministic assignment.
-    ``bucketing`` forwards to :func:`global_cumsum` ("bounds" = the
-    lineage-free quantile-bound mapping, identical results);
-    ``fixed_bounds`` (bounds mode) skips the quantile job with a
-    caller-provided literal grid — see global_cumsum's note."""
+    ``fixed_bounds`` forwards to :func:`global_cumsum`: a grid gives the
+    lineage-free bounds path, ``None`` the pinned range exchange."""
     cum = global_cumsum(
         df.withColumn("__one", F.lit(1)), order_cols, ["__one"], descending,
-        bucketing=bucketing, fixed_bounds=fixed_bounds,
+        fixed_bounds=fixed_bounds,
     )
     return cum.withColumnRenamed("cum___one", out_col).drop("__one")
 
@@ -673,7 +637,6 @@ def global_ntile(
     n_tiles: int,
     out_col: str = "tile",
     descending: bool = False,
-    bucketing: str = "pinned",
     fixed_bounds: Sequence[float] | None = None,
 ) -> DataFrame:
     """``NTILE(n) OVER (ORDER BY ...)`` with no unpartitioned window:
@@ -683,14 +646,14 @@ def global_ntile(
     global scan here. Order should be total (add a tiebreak column).
 
     This is the curriculum/decile-binning primitive: rank a corpus by a
-    quality score and cut it into equal-population bins at any scale."""
+    quality score and cut it into equal-population bins at any scale.
+    ``fixed_bounds`` picks the bucketing as in :func:`global_cumsum`."""
     cum = global_cumsum(
         df.withColumn("__one", F.lit(1)),
         order_cols,
         ["__one"],
         descending,
         with_totals=True,
-        bucketing=bucketing,
         fixed_bounds=fixed_bounds,
     )
     rn = F.col("cum___one")

@@ -17,7 +17,10 @@ NOT fall back to a single-task ``Window.orderBy``; it runs the two-phase
 prefix-scan from :mod:`operators.scan` — range-partition on the order key,
 per-partition row_number/lag/cumsum, then window-free boundary fill and
 prefix offsets over the |partitions|-sized summary frame. Same results on
-any partitioning; every window in the plan is partitioned.
+any partitioning; every window in the plan is partitioned. ``ttd_stats``
+takes an optional literal grid (``fixed_bounds``) for the lineage-free
+bounds bucketing; without one, and always for ``mark_episodes``, the scan
+is the pinned range exchange.
 """
 
 from __future__ import annotations
@@ -66,7 +69,6 @@ def _global_islands(
     order_cols: Sequence[str],
     y_true_col: str,
     episode_id_col: str | None,
-    bucketing: str = "pinned",
 ) -> DataFrame:
     """Global-order islands without an unpartitioned window: adds ``__idx``
     (global 1-based row number) and ``__island`` (island id on attack
@@ -98,17 +100,7 @@ def _global_islands(
     # window operators once per consumer. The single range-exchange
     # materialization the scan's correctness needs (see _pin_buckets)
     # sits at ``local`` instead — bucketed has exactly one consumer.
-    if bucketing == "bounds":
-        # lineage-free mapping (round 10): PID is a pure expression over
-        # quantile-bound literals, so every consumer recomputes it
-        # bit-identically and NO materialization is needed anywhere —
-        # the exchange under the per-bucket window is shared via
-        # ReuseExchange. Tie caveat as in scan.bounds_bucketed: a tie
-        # group stays in ONE bucket, so only use this when the order
-        # key is high-cardinality (w6's (ts, event_id) is unique).
-        bucketed = bounds_bucketed(df, order_cols)
-    else:
-        bucketed = range_bucketed(df, order_cols, pin=False)
+    bucketed = range_bucketed(df, order_cols, pin=False)
 
     w = W.partitionBy(PID).orderBy(*ordering)
     wcum = w.rowsBetween(W.unboundedPreceding, 0)
@@ -127,11 +119,7 @@ def _global_islands(
     local = local.withColumn("__int_b", interior.cast("int")).withColumn(
         "__lisl", F.sum("__int_b").over(wcum)
     )
-    if bucketing != "bounds":
-        # pinned mode: the one materialization the scan's correctness
-        # needs (physical-partition PIDs re-sample per execution);
-        # bounds mode needs none — PID is deterministic by construction
-        local = _pin_buckets(local)
+    local = _pin_buckets(local)  # the one materialization (note above)
 
     # ONE per-bucket summary aggregation (the only re-execution of the
     # window subtree): counts + interior-boundary totals + edge rows
@@ -202,7 +190,6 @@ def _global_ttd_episodes(
     y_true_col: str,
     y_pred_col: str,
     episode_id_col: str | None,
-    bucketing: str = "pinned",
     fixed_bounds: Sequence[float] | None = None,
 ) -> DataFrame:
     """Fused single-pass global TTD: per-episode ``(start_idx, det_idx)``
@@ -234,26 +221,23 @@ def _global_ttd_episodes(
     scan._pin_buckets) now costs |segments|, not |rows|, and the
     sort+window subtree genuinely executes once.
 
-    ``bucketing='bounds'`` CONTRACT: the segment frame carries NO pin at
-    all (lineage-free by design — see bounds_bucketed), so its window
+    ``fixed_bounds`` (a literal grid, e.g. footer timestamp statistics)
+    selects the lineage-free bounds bucketing — see bounds_bucketed.
+    CONTRACT: the segment frame then carries NO pin at all, so its window
     subtree may be recomputed per consumer (summ / gseg). That is only
     deterministic when ``order_cols`` is a UNIQUE key of ``df`` — with
     ties, min_by/max_by over the tie group and the lag-derived boundary
     bits can differ between recomputations, silently disagreeing across
-    consumers. Callers with a non-unique scan key must use
-    ``bucketing='pinned'`` (which freezes one sampling via the
-    localCheckpoint below). The in-repo callers order by (ts, event_id),
-    measured tie-free (max tie-group 1, FIXTURES.md)."""
+    consumers. Callers with a non-unique scan key must pass
+    ``fixed_bounds=None``: the pinned range exchange, which freezes one
+    sampling via the localCheckpoint below. The in-repo grid caller
+    orders by (ts, event_id), measured tie-free (max tie-group 1,
+    FIXTURES.md)."""
     ordering = [F.col(c).asc() for c in order_cols]
-    if bucketing == "bounds":
-        # lineage-free (round 10): see _global_islands — deterministic
-        # expression PIDs, no pin anywhere, exchange reuse dedupes the
-        # heavy stages across the segment frame's consumers.
-        # ``fixed_bounds`` (r12) additionally skips the per-build
-        # approxQuantile driver job when the caller knows the key domain
-        # (e.g. footer timestamp statistics) — grid values only set
-        # bucket balance, never results (scan.uniform_grid note).
-        bucketed = bounds_bucketed(df, order_cols, fixed_bounds=fixed_bounds)
+    if fixed_bounds is not None:
+        # deterministic expression PIDs, no pin anywhere; exchange reuse
+        # dedupes the heavy stages across the segment frame's consumers
+        bucketed = bounds_bucketed(df, order_cols, fixed_bounds)
     else:
         bucketed = range_bucketed(df, order_cols, pin=False)
 
@@ -303,7 +287,7 @@ def _global_ttd_episodes(
             ).alias("__det_lrn"),
         )
     )
-    if bucketing != "bounds":
+    if fixed_bounds is None:
         seg = seg.localCheckpoint(eager=False)
 
     summ = seg.groupBy(PID).agg(
@@ -382,25 +366,18 @@ def mark_episodes(
     episode_id_col: str | None = None,
     partition_cols: Sequence[str] = (),
     out_col: str = "episode",
-    bucketing: str = "pinned",
 ) -> DataFrame:
     """Assign a dense episode number to every attack row (y=1); benign rows
     get null. Episode boundaries: start of a y=1 run, or episode-id change
     inside a run. Without ``partition_cols`` the global order is scanned
-    with the two-phase prefix sum (no unpartitioned window).
-
-    ``bucketing='bounds'`` requires ``order_cols`` to uniquely key ``df``
-    (the lineage-free path has no pin, so recomputation across consumers
-    is only bit-stable for a tie-free ordering — see
-    ``_global_ttd_episodes``); pass ``bucketing='pinned'`` otherwise."""
+    with the two-phase prefix sum over the pinned range exchange (no
+    unpartitioned window)."""
     if partition_cols:
         marked = _partitioned_islands(
             df, order_cols, y_true_col, episode_id_col, partition_cols
         )
     else:
-        marked = _global_islands(
-            df, order_cols, y_true_col, episode_id_col, bucketing=bucketing
-        )
+        marked = _global_islands(df, order_cols, y_true_col, episode_id_col)
     # internal island column → caller's out_col (replacing any existing
     # column of that name, matching the old withColumn semantics)
     cols = [c for c in marked.columns if c not in ("__idx", "__island", out_col)]
@@ -415,15 +392,15 @@ def ttd_stats(
     window_hop_seconds: float,
     episode_id_col: str | None = None,
     partition_cols: Sequence[str] = (),
-    bucketing: str = "pinned",
     fixed_bounds: Sequence[float] | None = None,
 ) -> DataFrame:
     """Episode detection summary: one row with episodes_total,
     episodes_detected, avg_ttd_seconds, avg_ttd_hours.
 
-    ``bucketing='bounds'`` requires ``order_cols`` to uniquely key ``df``
-    (no pin on the lineage-free path — see ``_global_ttd_episodes``);
-    use ``bucketing='pinned'`` for non-unique scan keys."""
+    A ``fixed_bounds`` grid (global scan only) requires ``order_cols`` to
+    uniquely key ``df`` (no pin on the lineage-free path — see
+    ``_global_ttd_episodes``); leave it ``None`` for non-unique scan
+    keys."""
     if partition_cols:
         marked = _partitioned_islands(
             df, order_cols, y_true_col, episode_id_col, partition_cols
@@ -442,7 +419,7 @@ def ttd_stats(
         # fused single-pass path: per-episode stats straight from the
         # (bucket, local island) segment frame — no per-row global ids
         eps = _global_ttd_episodes(
-            df, order_cols, y_true_col, y_pred_col, episode_id_col, bucketing,
+            df, order_cols, y_true_col, y_pred_col, episode_id_col,
             fixed_bounds=fixed_bounds,
         )
     delay = (F.col("det_idx") - F.col("start_idx")) * F.lit(float(window_hop_seconds))

@@ -14,6 +14,8 @@ stddev via (n, Σx, Σx²)) compose exactly across phases.
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -27,8 +29,10 @@ from pyspark.sql import functions as F
 #: (the readers plan cache returns shared scan objects) never pays it
 #: twice. Values hold (input, result) — keeping the input alive pins its
 #: id() so keys cannot alias; entries are plan objects only, no data.
-_EMP_MEMO: dict[int, tuple[DataFrame, DataFrame]] = {}
+#: Least recently used out first past ``_EMP_MEMO_MAX`` entries.
+_EMP_MEMO: OrderedDict[int, tuple[DataFrame, DataFrame]] = OrderedDict()
 _EMP_MEMO_MAX = 256
+_EMP_MEMO_LOCK = threading.Lock()
 
 
 def ensure_min_parallelism(df: DataFrame) -> DataFrame:
@@ -43,15 +47,19 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
         # streaming frame — the source's maxFilesPerTrigger/cluster conf
         # governs parallelism there
         return df
-    hit = _EMP_MEMO.get(id(df))
-    if hit is not None and hit[0] is df:
-        return hit[1]
+    with _EMP_MEMO_LOCK:
+        hit = _EMP_MEMO.get(id(df))
+        if hit is not None and hit[0] is df:
+            _EMP_MEMO.move_to_end(id(df))
+            return hit[1]
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     out = df.repartition(target) if df.rdd.getNumPartitions() < target else df
-    if len(_EMP_MEMO) >= _EMP_MEMO_MAX:
-        _EMP_MEMO.clear()
-    _EMP_MEMO[id(df)] = (df, out)
+    with _EMP_MEMO_LOCK:
+        _EMP_MEMO[id(df)] = (df, out)
+        _EMP_MEMO.move_to_end(id(df))
+        if len(_EMP_MEMO) > _EMP_MEMO_MAX:
+            _EMP_MEMO.popitem(last=False)
     return out
 
 

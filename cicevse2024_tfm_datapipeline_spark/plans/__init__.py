@@ -191,7 +191,7 @@ def rotation_window(
 #     audit_truth_pairs/audit_found_pairs/audit_recall recall contract
 #     (r09 verdict "Next round" #3), so a fresh row is mandatory.
 #   - w6_sessionize_ttd: flipped to the lineage-free bounds scan
-#     (sessionize bucketing="bounds" — its (ts, event_id) order key is
+#     (sessionize's bounds scan — its (ts, event_id) order key is
 #     measured tie-free; SCALE.md "Sessionize bounds flip").
 # r11 changed-plan re-drives (rule item 2):
 #   - a_wasserstein_drift: the r10 ADVICE overflow fix lifts the segment
@@ -300,7 +300,7 @@ _R10_CHANGED = [
 
 # r09 changed-plan re-drives (rule item 2): round 9 executed the staged
 # r08 note — the ROC/cumsum tier now runs the lineage-free bounds-
-# bucketed scan (operators/metrics.py passes bucketing="bounds" to
+# bucketed scan (operators/metrics.py selected the bounds mode of
 # global_cumsum/grouped_cumsum; operators/scan.py:bounds_bucketed, with
 # the r09 dtype guard). Changed plans: the a13_* quartet (via
 # _threshold_cum_counts) and a11_multiclass_auc (via ovr_auc_summary's

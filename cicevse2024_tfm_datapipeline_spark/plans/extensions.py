@@ -1164,9 +1164,7 @@ def pack_concat_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cicevse2024_tfm_datapipeline_spark.operators.scan import footer_grid
 
     grid = footer_grid(spark, sf_dir, "documents", "doc_id")
-    cum = global_cumsum(
-        per_doc, ["doc_id"], ["n_tok"], bucketing="bounds", fixed_bounds=grid
-    )
+    cum = global_cumsum(per_doc, ["doc_id"], ["n_tok"], fixed_bounds=grid)
     chunk = F.floor(
         (F.col("cum_n_tok") - F.col("n_tok")) / F.lit(float(PACK_CAPACITY))
     ).cast("long")

@@ -267,9 +267,7 @@ def a_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cicevse2024_tfm_datapipeline_spark.operators.scan import footer_grid
 
     grid = footer_grid(spark, sf_dir, "events", "value", 10000.0)
-    scanned = global_cumsum(
-        grp, ["v"], ["cnt"], bucketing="bounds", fixed_bounds=grid
-    ).withColumn(
+    scanned = global_cumsum(grp, ["v"], ["cnt"], fixed_bounds=grid).withColumn(
         "before", F.col("cum_cnt") - F.col("cnt")
     )
     sums = scanned.agg(

@@ -151,7 +151,6 @@ def a_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cum = global_cumsum(
         cnt, ["tick"], ["cnt"], with_totals=True,
-        bucketing="bounds",
         fixed_bounds=footer_grid(spark, sf_dir, "events", "value", 10000.0),
     )
     _n = F.col("tot_cnt")

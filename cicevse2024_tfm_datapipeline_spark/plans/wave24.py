@@ -357,7 +357,6 @@ def a_mutual_information_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tiled = global_ntile(
         ev, ["x", "event_id"], 10, out_col="d",
-        bucketing="bounds",
         fixed_bounds=footer_grid(spark, sf_dir, "events", "value"),
     )
     joint = tiled.groupBy("event_type", "d").agg(

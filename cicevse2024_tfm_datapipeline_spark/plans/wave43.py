@@ -360,11 +360,14 @@ def dedup_suffix_lcp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-sized suffix frame (bounds-mode contract: (k,s,doc_id,pos)
     # is a total order, so the two consumers below recompute
     # bit-identically); the summary consumer reduces map-side to
-    # |buckets| rows before its shuffle. relative_error 1e-2: the
-    # quantile grid only balances bucket SIZES (correctness never
-    # depends on where the bounds fall), so the default 1e-4 GK sketch
-    # is wasted precision on a 10^8-suffix frame
-    bucketed = bounds_bucketed(sfx, ["k", "s", "doc_id", "pos"], relative_error=1e-2)
+    # |buckets| rows before its shuffle. No footer brackets a derived
+    # key, so one driver-side quantile job gives the grid, one bucket per
+    # shuffle partition. relative_error 1e-2: the grid only balances
+    # bucket SIZES (correctness never depends on where the bounds fall),
+    # so a 1e-4 GK sketch is wasted precision on a 10^8-suffix frame
+    n_b = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    grid = sfx.approxQuantile("k", [i / n_b for i in range(1, n_b)], 1e-2)
+    bucketed = bounds_bucketed(sfx, ["k", "s", "doc_id", "pos"], grid)
     w = W.partitionBy(PID).orderBy("k", "s", "doc_id", "pos")
     local = bucketed.select(PID, "s", F.lag("s").over(w).alias("__prev_in"))
     summ = bucketed.groupBy(PID).agg(

@@ -196,7 +196,6 @@ def f_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     glob = global_row_number(
         docs, ["n_chars", "doc_id"], "g",
-        bucketing="bounds",
         fixed_bounds=footer_grid(spark, sf_dir, "documents", "n_chars"),
     ).select(
         F.col("n_chars").alias("norm_chars"), F.col("g").cast("long").alias("g")

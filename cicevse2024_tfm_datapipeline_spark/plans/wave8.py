@@ -177,8 +177,7 @@ def a_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     grid = footer_grid(spark, sf_dir, "lineitem", "l_extendedprice", 100.0)
     scanned = global_cumsum(
-        grp, ["cents"], ["w"], with_totals=True,
-        bucketing="bounds", fixed_bounds=grid,
+        grp, ["cents"], ["w"], with_totals=True, fixed_bounds=grid
     )
     return (
         scanned.filter(2 * F.col("cum_w") >= F.col("tot_w"))

@@ -332,16 +332,15 @@ def w6_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y_pred",
         window_hop_seconds=1.0,
         episode_id_col="ep_id",
-        # lineage-free bounds scan (round 10): the (ts, event_id) order
-        # key is UNIQUE in this view (measured max-tie 1 at sf0.01/0.1),
-        # so the tie-skew caveat that kept sessionize pinned through r09
-        # does not apply here; the flip removes the last localCheckpoint
-        # in a timed path. fixed_bounds (r12) also removes the remaining
-        # per-build approxQuantile job: the NTZ scan key is epoch seconds
-        # of the naive timestamp, and the footer ts statistics bracket it
-        # — a uniform grid over [key(min), key(max)] only sets bucket
-        # balance (events are near-uniform in time), never results.
-        bucketing="bounds",
+        # the footer grid selects the lineage-free bounds scan: the
+        # (ts, event_id) order key is UNIQUE in this view (measured
+        # max-tie 1 at sf0.01/0.1), as its no-pin contract requires, and
+        # no localCheckpoint stays in a timed path. The NTZ scan key is
+        # epoch seconds of the naive timestamp, and the footer ts
+        # statistics bracket it — a uniform grid over [key(min),
+        # key(max)] only sets bucket balance (events are near-uniform in
+        # time), never results. Without statistics the grid is None and
+        # the scan pins.
         fixed_bounds=footer_grid(spark, sf_dir, "events", "ts"),
     )
     return out.select(

@@ -36,3 +36,22 @@ def test_schema_split_handles_nested_brackets():
     assert _split_schema("a int, b array<double>, c map<string,int>") == [
         ("a", "int"), ("b", "array<double>"), ("c", "map<string,int>"),
     ]
+
+
+def test_literal_df_strings_ignore_escaped_string_literals_conf(spark):
+    """Quotes and backslashes in values and field names must round-trip
+    whatever ``spark.sql.parser.escapedStringLiterals`` says."""
+    from cicevse2024_tfm_datapipeline_spark.functions.literals import literal_df
+
+    key = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(key)
+    try:
+        for flag in ("true", "false"):
+            spark.conf.set(key, flag)
+            row = literal_df(
+                spark, [("it's", "a\\b")], "x string, y'\\z string"
+            ).collect()[0]
+            assert (row[0], row[1]) == ("it's", "a\\b"), flag
+            assert row.__fields__ == ["x", "y'\\z"], flag
+    finally:
+        spark.conf.set(key, old)

@@ -1,7 +1,7 @@
 """Parquet writers may omit min/max statistics. The eight fixed-grid
 queries size their bucket grids from footer statistics; without them
-they must fall back to their grid-less path (quantile bounds, or the
-pinned path for r5's id side) and return the same rows, not raise."""
+they must fall back to the grid-less path — the pinned range exchange —
+and return the same rows, not raise."""
 
 from __future__ import annotations
 

@@ -60,3 +60,57 @@ def test_bucketed_join_has_no_exchange(spark):
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_min_parallelism_memo_evicts_oldest_first(spark, monkeypatch):
+    from collections import OrderedDict
+
+    from cicevse2024_tfm_datapipeline_spark.operators import skew
+
+    monkeypatch.setattr(skew, "_EMP_MEMO", OrderedDict())
+    frames = [spark.range(1).withColumn("i", F.lit(i)) for i in range(257)]
+    for df in frames:
+        skew.ensure_min_parallelism(df)
+    assert len(skew._EMP_MEMO) == skew._EMP_MEMO_MAX == 256
+    assert id(frames[0]) not in skew._EMP_MEMO
+    assert all(skew._EMP_MEMO[id(df)][0] is df for df in frames[1:])
+
+
+def test_min_parallelism_memo_threaded_stress(spark, monkeypatch):
+    """Concurrent callers must never see a half-evicted memo: each result
+    is the one computed for its own input, and the bound holds."""
+    import sys
+    import threading
+    from collections import OrderedDict
+
+    from cicevse2024_tfm_datapipeline_spark.operators import skew
+
+    monkeypatch.setattr(skew, "_EMP_MEMO", OrderedDict())
+    monkeypatch.setattr(skew, "_EMP_MEMO_MAX", 4)
+    frames = [spark.range(1).withColumn("i", F.lit(i)) for i in range(12)]
+    errors: list[BaseException] = []
+
+    def work(k):
+        try:
+            for j in range(30):
+                df = frames[(k * 7 + j) % len(frames)]
+                out = skew.ensure_min_parallelism(df)
+                assert out.columns == df.columns
+        except Exception as e:  # re-raised below, in the test thread
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(k,)) for k in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert not errors, errors
+    assert len(skew._EMP_MEMO) <= 4
+    by_id = {id(f): f for f in frames}
+    assert all(v[0] is by_id[k] for k, v in skew._EMP_MEMO.items())

@@ -1,8 +1,9 @@
 """bounds_bucketed (operators/scan.py): the lineage-free twin of the
-pinned range-exchange scan. Must (a) produce a PID monotone in the scan
-order with every tie group in one bucket, (b) make global_cumsum return
-IDENTICAL results to the pinned path, (c) actually be lineage-free — no
-localCheckpoint materialization in the plan."""
+pinned range-exchange scan, selected by passing a literal grid as
+``fixed_bounds``. Must (a) produce a PID monotone in the scan order with
+every tie group in one bucket, (b) make global_cumsum return IDENTICAL
+results to the pinned path (``fixed_bounds=None``), (c) actually be
+lineage-free — no localCheckpoint materialization in the plan."""
 
 from __future__ import annotations
 
@@ -11,11 +12,17 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from cicevse2024_tfm_datapipeline_spark.operators import scan
 from cicevse2024_tfm_datapipeline_spark.operators.scan import (
     PID,
+    _bounds_key_expr,
     bounds_bucketed,
     global_cumsum,
+    uniform_grid,
 )
+
+#: a uniform grid over the [0, 1] score domain of ``_frame``
+_GRID16 = uniform_grid(0.0, 1.0, 16)
 
 
 def _frame(spark, n=5000, seed=11):
@@ -27,10 +34,19 @@ def _frame(spark, n=5000, seed=11):
     return spark.createDataFrame(rows, "id long, score double, hit int")
 
 
+def _data_grid(df, key, n_buckets=8):
+    """A uniform grid over the data's [min, max] of ``key`` in the units
+    ``bounds_bucketed`` compares — what ``footer_grid`` derives from
+    parquet statistics."""
+    kexpr = _bounds_key_expr(df, key)
+    lo, hi = df.agg(F.min(kexpr), F.max(kexpr)).first()
+    return uniform_grid(lo, hi, n_buckets)
+
+
 @pytest.mark.parametrize("descending", [False, True])
 def test_pid_monotone_and_ties_colocated(spark, descending):
     df = bounds_bucketed(
-        _frame(spark), ["score", "id"], descending=descending, n_buckets=16
+        _frame(spark), ["score", "id"], _GRID16, descending=descending
     )
     got = df.select("score", PID).collect()
     got.sort(key=lambda r: r["score"], reverse=descending)
@@ -42,7 +58,10 @@ def test_pid_monotone_and_ties_colocated(spark, descending):
     assert all(len(s) == 1 for s in by_score.values()), (
         "a tie group spanning buckets would corrupt prefix offsets"
     )
-    assert len(set(pids)) > 4, "bounds should actually split the domain"
+    # the 15 grid bounds, thinned to one bucket per shuffle partition,
+    # split the [0, 1] scores into that many populated buckets
+    n_b = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert len(set(pids)) == min(16, n_b), "bounds should split the domain"
 
 
 @pytest.mark.parametrize("descending", [False, True])
@@ -60,7 +79,7 @@ def test_global_cumsum_bounds_equals_pinned(spark, descending):
     }
     bounds = {
         r["id"]: (r["cum_hit"], r["tot_hit"])
-        for r in global_cumsum(df, bucketing="bounds", **kw).collect()
+        for r in global_cumsum(df, fixed_bounds=_GRID16, **kw).collect()
     }
     assert pinned == bounds
 
@@ -69,7 +88,7 @@ def test_null_keys_take_the_edge_bucket(spark):
     df = spark.createDataFrame(
         [(1, None), (2, 0.5), (3, 0.9)], "id long, score double"
     )
-    asc = {r["id"]: r[PID] for r in bounds_bucketed(df, ["score"]).collect()}
+    asc = {r["id"]: r[PID] for r in bounds_bucketed(df, ["score"], [0.7]).collect()}
     # null bucket must be 0, NOT -1: a negative PID falls into super-group
     # -1 and the single-super shortcut of the prefix combine drops its
     # total (the hypothesis differential caught exactly this in round 9)
@@ -77,36 +96,37 @@ def test_null_keys_take_the_edge_bucket(spark):
     assert all(p >= 0 for p in asc.values())
     desc = {
         r["id"]: r[PID]
-        for r in bounds_bucketed(df, ["score"], descending=True).collect()
+        for r in bounds_bucketed(df, ["score"], [0.7], descending=True).collect()
     }
-    assert desc[1] > desc[2] >= desc[3]  # nulls LAST under desc
+    assert desc[1] > desc[2] > desc[3]  # nulls LAST under desc
 
 
 @pytest.mark.parametrize("descending", [False, True])
 def test_nan_scores_no_duplicate_nan_bounds(spark, descending):
-    """r09 ADVICE (low): NaN quantile bounds are neither deduped by set()
-    (NaN != NaN) nor ordered by sorted(), so a NaN-heavy score column
-    could embed duplicate NaN bounds — wasted buckets, and under desc
-    every non-null PID shifted by the NaN-bound count. Non-finite bounds
-    are now filtered before embedding; NaN KEYS still bucket fine without
-    a NaN bound (Spark orders NaN above every double, so the strict
+    """r09 ADVICE (low): NaN bounds are neither deduped by set()
+    (NaN != NaN) nor ordered by sorted(), so a NaN-bearing grid could
+    embed duplicate NaN bounds — wasted buckets, and under desc every
+    non-null PID shifted by the NaN-bound count. Non-finite grid entries
+    are filtered before embedding; NaN KEYS still bucket fine without a
+    NaN bound (Spark orders NaN above every double, so the strict
     comparison sends them to the correct edge on its own). Equality with
     the pinned path over a NaN-bearing column is the functional pin."""
-    nan = float("nan")
+    nan, inf = float("nan"), float("inf")
     rows = [
         (i, nan if i % 3 == 0 else round((i * 37 % 100) / 100, 2), i % 2)
         for i in range(900)
     ]
     df = spark.createDataFrame(rows, "id long, score double, hit int")
+    grid = [nan, 0.25, nan, 0.5, inf, 0.75, -inf, nan]
     kw = dict(order_cols=["score", "id"], sum_cols=["hit"], descending=descending)
     pinned = {r["id"]: r["cum_hit"] for r in global_cumsum(df, **kw).collect()}
     bounds = {
         r["id"]: r["cum_hit"]
-        for r in global_cumsum(df, bucketing="bounds", **kw).collect()
+        for r in global_cumsum(df, fixed_bounds=grid, **kw).collect()
     }
     assert pinned == bounds
     # and the PID mapping stays monotone with NaN keys at the large edge
-    tagged = bounds_bucketed(df, ["score", "id"], descending=descending, n_buckets=8)
+    tagged = bounds_bucketed(df, ["score", "id"], grid, descending=descending)
     got = tagged.select("score", PID).collect()
     import math as _m
 
@@ -119,6 +139,9 @@ def test_nan_scores_no_duplicate_nan_bounds(spark, descending):
     got.sort(key=_key)
     pids = [r[PID] for r in got]
     assert pids == sorted(pids), "PID must stay monotone with NaN keys"
+    # only the three finite bounds split the domain: four buckets, no
+    # bucket for a dropped NaN/inf entry (desc PIDs would shift by one)
+    assert set(pids) == ({0, 1, 2, 3} if descending else {1, 2, 3, 4})
 
 
 @pytest.mark.parametrize("descending", [False, True])
@@ -134,15 +157,21 @@ def test_fixed_bounds_equals_pinned_and_tolerates_bad_grid(spark, descending):
     pinned = {r["id"]: r["cum_hit"] for r in global_cumsum(df, **kw).collect()}
     fixed = {
         r["id"]: r["cum_hit"]
-        for r in global_cumsum(
-            df, bucketing="bounds", fixed_bounds=grid, **kw
-        ).collect()
+        for r in global_cumsum(df, fixed_bounds=grid, **kw).collect()
     }
     assert pinned == fixed
     # the grid actually buckets (not everything in one partition)
-    tagged = bounds_bucketed(df, ["score", "id"], descending=descending, fixed_bounds=grid)
+    tagged = bounds_bucketed(df, ["score", "id"], grid, descending=descending)
     n_pids = tagged.select(PID).distinct().count()
     assert n_pids >= 4  # 0.25/0.5/0.75 split the [0,1] domain + edges
+    # a grid far longer than the partition count (PIDs past the super-group
+    # size would escape the single-super-group prefix combine)
+    long_grid = uniform_grid(0.0, 1.0, 2 * scan.SUPER)
+    fixed = {
+        r["id"]: r["cum_hit"]
+        for r in global_cumsum(df, fixed_bounds=long_grid, **kw).collect()
+    }
+    assert pinned == fixed
 
 
 def test_bounds_plan_is_lineage_free(spark, tmp_path):
@@ -156,7 +185,7 @@ def test_bounds_plan_is_lineage_free(spark, tmp_path):
         df, ["score", "id"], ["hit"]
     )._jdf.queryExecution().toString()
     bounds_plan = global_cumsum(
-        df, ["score", "id"], ["hit"], bucketing="bounds"
+        df, ["score", "id"], ["hit"], fixed_bounds=_GRID16
     )._jdf.queryExecution().toString()
     assert "ExistingRDD" in pinned_plan
     assert "ExistingRDD" not in bounds_plan
@@ -170,7 +199,7 @@ def test_timestamp_first_key_supported(spark):
         spark.createDataFrame(rows, "id long, ts string")
         .withColumn("ts", F.to_timestamp("ts"))
     )
-    out = bounds_bucketed(df, ["ts", "id"])
+    out = bounds_bucketed(df, ["ts", "id"], _data_grid(df, "ts"))
     got = out.select("ts", PID).collect()
     got.sort(key=lambda r: r["ts"])
     pids = [r[PID] for r in got]
@@ -186,8 +215,6 @@ def test_timestamp_ntz_key_is_dst_safe(spark):
     (02:30 → the 03:30 EDT instant > the 03:00 instant). The
     field-derived key (days×86400 + in-day seconds) is zone-independent
     and strictly monotone across the gap."""
-    from cicevse2024_tfm_datapipeline_spark.operators.scan import _bounds_key_expr
-
     old = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
@@ -204,7 +231,7 @@ def test_timestamp_ntz_key_is_dst_safe(spark):
         assert ks == sorted(ks) and len(set(ks)) == len(ks), (
             "NTZ key must be strictly monotone across the spring-forward gap"
         )
-        out = bounds_bucketed(df, ["ts", "id"])
+        out = bounds_bucketed(df, ["ts", "id"], _data_grid(df, "ts"))
         got = out.select("ts", PID).collect()
         got.sort(key=lambda r: r["ts"])
         pids = [r[PID] for r in got]
@@ -220,13 +247,11 @@ def test_bounds_mode_multi_super_group(spark, super_size, monkeypatch):
     exercised UNDER BOUNDS BUCKETING too (a cluster with >SUPER shuffle
     partitions runs it; locally it never triggers) — shrink SUPER so the
     within-super window, super-totals triangle, and broadcast stitch all
-    execute over bounds-derived PIDs, for both the global and the grouped
-    scan, and require exact equality with the naive window."""
+    execute over grid-derived PIDs, and require exact equality with the
+    naive window."""
     import random
 
     from pyspark.sql import Window as W
-
-    from cicevse2024_tfm_datapipeline_spark.operators import scan
 
     monkeypatch.setattr(scan, "SUPER", super_size)
     rng = random.Random(7)
@@ -237,7 +262,9 @@ def test_bounds_mode_multi_super_group(spark, super_size, monkeypatch):
     df = spark.createDataFrame(rows, "k double, v int, g string").repartition(13)
     got = {
         round(r["k"], 9): r["cum_v"]
-        for r in scan.global_cumsum(df, ["k"], ["v"], bucketing="bounds").collect()
+        for r in scan.global_cumsum(
+            df, ["k"], ["v"], fixed_bounds=uniform_grid(0, 100, 16)
+        ).collect()
     }
     w = W.orderBy(F.asc("k")).rowsBetween(W.unboundedPreceding, 0)
     want = {
@@ -245,25 +272,11 @@ def test_bounds_mode_multi_super_group(spark, super_size, monkeypatch):
         for r in df.select("k", F.sum("v").over(w).alias("cum")).collect()
     }
     assert got == want
-    from cicevse2024_tfm_datapipeline_spark.operators.scan import grouped_cumsum
-
-    got_g = {
-        (r["g"], round(r["k"], 9)): r["cum_v"]
-        for r in grouped_cumsum(
-            df, ["g"], ["k"], ["v"], bucketing="bounds"
-        ).collect()
-    }
-    wg = W.partitionBy("g").orderBy(F.asc("k")).rowsBetween(W.unboundedPreceding, 0)
-    want_g = {
-        (r["g"], round(r["k"], 9)): r["cum"]
-        for r in df.select("g", "k", F.sum("v").over(wg).alias("cum")).collect()
-    }
-    assert got_g == want_g
 
 
 def test_a13_tier_is_lineage_free(spark):
-    """Round 9 flipped the ROC tier to bucketing='bounds': the a13
-    quartet's plans must no longer contain a localCheckpoint scan
+    """The ROC tier runs the grid-selected bounds scan: the a13
+    quartet's plans must not contain a localCheckpoint scan
     (ExistingRDD) — the lineage cut and its unrecoverable
     executor-storage copy are gone; multi-consumer reuse rides shuffle-
     stage reuse alone (the measured winner — no persist either).
@@ -296,9 +309,9 @@ def test_string_first_key_raises(spark):
     rows = [(str(i), 1) for i in range(1, 40)]  # '1','2',...,'39'
     df = spark.createDataFrame(rows, "key string, one int")
     with pytest.raises(TypeError, match="string"):
-        bounds_bucketed(df, ["key"], n_buckets=8)
+        bounds_bucketed(df, ["key"], [10.0, 20.0])
     with pytest.raises(TypeError):
-        global_cumsum(df, ["key"], ["one"], bucketing="bounds")
+        global_cumsum(df, ["key"], ["one"], fixed_bounds=[10.0, 20.0])
     # pinned path: lexicographic order is the declared order — correct
     got = {
         r["key"]: r["cum_one"]
@@ -323,24 +336,23 @@ def test_date_first_key_supported(spark):
     pinned = {r["id"]: r["cum_one"] for r in global_cumsum(df, **kw).collect()}
     bounds = {
         r["id"]: r["cum_one"]
-        for r in global_cumsum(df, bucketing="bounds", **kw).collect()
+        for r in global_cumsum(df, fixed_bounds=_data_grid(df, "d"), **kw).collect()
     }
     assert pinned == bounds
 
 
 def test_all_null_keys_and_boolean_keys(spark):
     """Degenerate domains must not corrupt the scan: an all-null key
-    column gives an empty bound list (every row lands in the edge
-    bucket, cumsum still correct over the tiebreak order), and a
-    boolean key (allowed dtype: false < true survives the double cast)
-    matches the pinned path."""
+    column puts every row in the null edge bucket (cumsum still correct
+    over the tiebreak order), and a boolean key (allowed dtype:
+    false < true survives the double cast) matches the pinned path."""
     allnull = spark.createDataFrame(
         [(i, None, 1) for i in range(50)], "id long, k double, one int"
     )
     got = {
         r["id"]: r["cum_one"]
         for r in global_cumsum(
-            allnull, ["k", "id"], ["one"], bucketing="bounds"
+            allnull, ["k", "id"], ["one"], fixed_bounds=[0.5]
         ).collect()
     }
     assert got == {i: i + 1 for i in range(50)}
@@ -351,7 +363,7 @@ def test_all_null_keys_and_boolean_keys(spark):
     pinned = {r["id"]: r["cum_one"] for r in global_cumsum(boolean, **kw).collect()}
     bounds = {
         r["id"]: r["cum_one"]
-        for r in global_cumsum(boolean, bucketing="bounds", **kw).collect()
+        for r in global_cumsum(boolean, fixed_bounds=[0.5], **kw).collect()
     }
     assert pinned == bounds
 
@@ -416,40 +428,6 @@ def test_rotation_window_never_driven_overflow_truncates():
     assert win[6:8] == ["q000", "q001"]
 
 
-@pytest.mark.parametrize("descending", [False, True])
-def test_grouped_cumsum_bounds_equals_pinned(spark, descending):
-    """grouped_cumsum's bounds mode buckets on the ORDER column alone
-    (global order bounds are monotone within every group) — results must
-    match the pinned (group, order) range path exactly, including
-    per-group totals."""
-    import random
-
-    from cicevse2024_tfm_datapipeline_spark.operators.scan import grouped_cumsum
-
-    rng = random.Random(13)
-    rows = [
-        (i, rng.choice(["a", "b", "c"]), round(rng.uniform(0, 1), 2), rng.randint(0, 1))
-        for i in range(4000)
-    ]
-    df = spark.createDataFrame(rows, "id long, grp string, score double, hit int")
-    kw = dict(
-        group_cols=["grp"],
-        order_cols=["score", "id"],
-        sum_cols=["hit"],
-        descending=descending,
-        with_totals=True,
-    )
-    pinned = {
-        r["id"]: (r["cum_hit"], r["tot_hit"])
-        for r in grouped_cumsum(df, **kw).collect()
-    }
-    bounds = {
-        r["id"]: (r["cum_hit"], r["tot_hit"])
-        for r in grouped_cumsum(df, bucketing="bounds", **kw).collect()
-    }
-    assert pinned == bounds
-
-
 @pytest.mark.parametrize(
     "table,column,scale",
     [("events", "ts", 1.0), ("events", "value", 10000.0), ("documents", "doc_id", 1.0)],
@@ -458,11 +436,7 @@ def test_footer_grid_brackets_the_bucketing_key(spark, table, column, scale):
     """footer_grid spans [min, max] of the key bounds_bucketed actually
     compares — timestamps in the epoch seconds _bounds_key_expr derives,
     scaled keys times ``scale`` — one bucket per shuffle partition."""
-    from cicevse2024_tfm_datapipeline_spark.operators.scan import (
-        _bounds_key_expr,
-        footer_grid,
-        uniform_grid,
-    )
+    from cicevse2024_tfm_datapipeline_spark.operators.scan import footer_grid
     from cicevse2024_tfm_datapipeline_spark.sources.readers import load_table
 
     sf = "/root/testdata/sf0.001"

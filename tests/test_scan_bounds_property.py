@@ -1,9 +1,10 @@
 """Property-based differential for the lineage-free bounds scan: for ANY
 small frame — integer or double keys, heavy or no ties, with or without
-nulls, ascending or descending — ``global_cumsum(bucketing='bounds')``
-must equal the pinned range-exchange path row for row. The example count
-is capped (each example runs Spark jobs); the generator biases toward
-the hard cases: duplicate-heavy key domains and null mixtures."""
+nulls, ascending or descending — ``global_cumsum(fixed_bounds=grid)``
+must equal the pinned range-exchange path (``fixed_bounds=None``) row for
+row. The example count is capped (each example runs Spark jobs); the
+generator biases toward the hard cases: duplicate-heavy key domains,
+null mixtures and heavy-tailed keys."""
 
 from __future__ import annotations
 
@@ -45,10 +46,15 @@ if _HYP:
     )
     @given(keys=_keys, descending=st.booleans())
     def test_bounds_equals_pinned_on_random_frames(spark, keys, descending):
+        """A grid fitted to the data's [min, max] — the shape
+        ``footer_grid`` derives from parquet statistics."""
         from cicevse2024_tfm_datapipeline_spark.operators.scan import (
             global_cumsum,
+            uniform_grid,
         )
 
+        present = [float(k) for k in keys if k is not None]
+        grid = uniform_grid(min(present), max(present), 8) if present else []
         rows = [(i, None if k is None else float(k), 1 + (i % 3)) for i, k in enumerate(keys)]
         df = spark.createDataFrame(rows, "id long, k double, v int")
         kw = dict(
@@ -63,7 +69,7 @@ if _HYP:
         }
         bounds = {
             r["id"]: (r["cum_v"], r["tot_v"])
-            for r in global_cumsum(df, bucketing="bounds", **kw).collect()
+            for r in global_cumsum(df, fixed_bounds=grid, **kw).collect()
         }
         assert pinned == bounds
 
@@ -116,8 +122,55 @@ if _HYP:
         }
         fixed = {
             r["id"]: (r["cum_v"], r["tot_v"])
-            for r in global_cumsum(
-                df, bucketing="bounds", fixed_bounds=grid, **kw
-            ).collect()
+            for r in global_cumsum(df, fixed_bounds=grid, **kw).collect()
         }
         assert pinned == fixed
+
+    @pytest.mark.usefixtures("spark")
+    @settings(
+        max_examples=8,
+        deadline=None,
+        suppress_health_check=[HealthCheck.function_scoped_fixture],
+    )
+    @given(
+        heavy=st.integers(min_value=0, max_value=40),
+        n_heavy=st.integers(min_value=60, max_value=240),
+        # long tail: powers of two spread the keys over orders of magnitude
+        tail=st.lists(st.integers(min_value=0, max_value=40), min_size=1, max_size=40),
+        descending=st.booleans(),
+    )
+    def test_heavy_tailed_key_on_uniform_grid(
+        spark, heavy, n_heavy, tail, descending
+    ):
+        """Skew gate: one key value holds most rows and the rest form a
+        long tail. A uniform grid over [min, max] — the footer-grid shape —
+        must still give exactly the pinned results, and the whole tie
+        group lands in ONE bucket: the imbalance ``bounds_bucketed``
+        documents (the range exchange would split it)."""
+        from cicevse2024_tfm_datapipeline_spark.operators.scan import (
+            PID,
+            global_cumsum,
+            uniform_grid,
+        )
+
+        keys = [2.0**heavy] * n_heavy + [2.0**x for x in tail]
+        rows = [(i, k, 1 + (i % 3)) for i, k in enumerate(keys)]
+        df = spark.createDataFrame(rows, "id long, k double, v int").repartition(3)
+        kw = dict(
+            order_cols=["k", "id"],
+            sum_cols=["v"],
+            descending=descending,
+            with_totals=True,
+        )
+        n_b = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        grid = uniform_grid(min(keys), max(keys), n_b)
+        pinned = {
+            r["id"]: (r["cum_v"], r["tot_v"])
+            for r in global_cumsum(df, **kw).collect()
+        }
+        got = global_cumsum(df, fixed_bounds=grid, keep_pid=True, **kw).collect()
+        assert pinned == {r["id"]: (r["cum_v"], r["tot_v"]) for r in got}
+        heavy_pids = {r[PID] for r in got if r["k"] == 2.0**heavy}
+        assert len(heavy_pids) == 1, "a tie group must never span buckets"
+        (pid,) = heavy_pids
+        assert sum(r[PID] == pid for r in got) >= n_heavy

@@ -105,8 +105,8 @@ def test_global_ttd_fused_path_randomized(spark, seed, n, parts, super_size, mon
 def test_global_ttd_bounds_mode_matches_pinned(
     spark, super_size, monkeypatch, tmp_path
 ):
-    """Round-10 flip: the lineage-free bounds bucketing must reproduce the
-    pinned path exactly (including across the hierarchical super-group
+    """A literal grid selects the lineage-free bounds bucketing, which
+    must reproduce the pinned path exactly (including across the hierarchical super-group
     combine) and keep the plan free of checkpointed RDD scans — the flip
     exists to remove the last localCheckpoint in a timed path."""
     import random as _random
@@ -115,6 +115,7 @@ def test_global_ttd_bounds_mode_matches_pinned(
     from cicevse2024_tfm_datapipeline_spark.operators.sessionize import ttd_stats
 
     monkeypatch.setattr(scan, "SUPER", super_size)
+    grid = scan.uniform_grid(0, 3999, 16)
     rng = _random.Random(417)
     rows = []
     for i in range(4000):
@@ -135,28 +136,8 @@ def test_global_ttd_bounds_mode_matches_pinned(
     df = spark.read.parquet(str(tmp_path / "t"))
     kw = dict(window_hop_seconds=2.0, episode_id_col="ep")
     pinned = ttd_stats(df, ["idx"], "yt", "yp", **kw).collect()[0]
-    bounds_df = ttd_stats(df, ["idx"], "yt", "yp", bucketing="bounds", **kw)
+    bounds_df = ttd_stats(df, ["idx"], "yt", "yp", fixed_bounds=grid, **kw)
     bounds = bounds_df.collect()[0]
     assert pinned.asDict() == bounds.asDict()
     plan = bounds_df._jdf.queryExecution().toString()
     assert "ExistingRDD" not in plan, "bounds mode must not pin anything"
-
-
-def test_mark_episodes_bounds_mode_matches_pinned(spark):
-    from cicevse2024_tfm_datapipeline_spark.operators.sessionize import (
-        mark_episodes,
-    )
-
-    rows = [(i, 1 if (i // 7) % 2 else 0, "e" + str(i // 30)) for i in range(900)]
-    df = spark.createDataFrame(rows, ["idx", "yt", "ep"]).repartition(6)
-    p = {
-        r["idx"]: r["episode"]
-        for r in mark_episodes(df, ["idx"], "yt", episode_id_col="ep").collect()
-    }
-    b = {
-        r["idx"]: r["episode"]
-        for r in mark_episodes(
-            df, ["idx"], "yt", episode_id_col="ep", bucketing="bounds"
-        ).collect()
-    }
-    assert p == b
