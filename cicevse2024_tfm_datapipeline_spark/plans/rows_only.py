@@ -1673,10 +1673,11 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_id"),
         (F.unix_micros("c_ts") - F.unix_micros("v_ts")).alias("lag_us"),
     )
-    # a stream-stream join runs TWO state stores per partition per
-    # micro-batch; at smoke scale 32 near-empty state tasks per store
-    # dominate wall time (measured 10s @ 32 vs 2.8s @ 8 on sf0.1) —
-    # production sizes this by throughput
+    # a stream-stream join runs TWO state stores per shard per
+    # micro-batch, so near-empty shards dominate at smoke scale (sf0.1,
+    # warm, local[32] on 4 cores: 3.4 s at 8 vs 8.6 s at 32). 8 is a
+    # request: run_to_completion caps it at the session's task slots.
+    # Production sizes it by throughput.
     out = run_to_completion(
         joined, "stream_ss_join_out", output_mode="append", shuffle_partitions=8
     )

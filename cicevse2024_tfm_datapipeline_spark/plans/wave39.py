@@ -137,13 +137,13 @@ def s19_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
         docs.filter(F.col("source") == "src1")
         .withColumn("n_chars", F.col("n_chars") + 1000)
     )
-    conf = spark.conf
-    prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        patched.write.mode("overwrite").partitionBy("source").parquet(lake)
-    finally:
-        conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # the per-write option beats the session conf, which stays untouched
+    (
+        patched.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("source")
+        .parquet(lake)
+    )
     back = spark.read.parquet(lake).filter(
         F.col("source").isin("src0", "src1", "src2", "src3")
     )

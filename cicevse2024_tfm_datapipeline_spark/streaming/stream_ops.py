@@ -16,11 +16,16 @@ timestamps upstream). For custom stateful logic beyond these,
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: state sentinel for "no rows folded yet" in the ordering-contract columns
 _NO_TS = -(2**62)
+
+#: serializes run_to_completion's conf window around ``start()``
+_START_LOCK = threading.Lock()
 
 
 def _order_key_i64(series):
@@ -199,7 +204,7 @@ def run_to_completion(
     stream_df: DataFrame,
     query_name: str,
     output_mode: str = "append",
-    shuffle_partitions: int | None = 32,
+    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Drive a streaming plan over the available files and return the
     result as a batch DataFrame (memory sink; test/smoke harness).
@@ -208,33 +213,40 @@ def run_to_completion(
     ``complete`` emits the full aggregate state — use it when comparing
     the stream against a batch/SQL oracle over the whole input.
 
-    The state-store shard count is frozen per checkpoint from
-    ``spark.sql.shuffle.partitions`` at first start; these harness
-    streams always begin from a fresh checkpoint, so the conf is scoped
-    down here (and restored after) — under a default 200-partition
-    session every stateful stage would otherwise run 200 near-empty
-    state tasks PER MICRO-BATCH (measured 58 s for a two-batch dedup
-    stream that runs in ~6 s right-sized). Production sizes this by
-    throughput; pass ``shuffle_partitions=None`` to inherit."""
+    State-store shards: ``min(requested, defaultParallelism)``, where
+    ``requested`` is ``shuffle_partitions`` if given, else the session's
+    effective ``spark.sql.shuffle.partitions``. Every shard is loaded and
+    committed on every micro-batch, so a shard is a fixed cost per batch,
+    and shards beyond the task slots run in extra waves: never more
+    shards than the caller asks for, never more than can run at once.
+
+    The shard count is frozen per checkpoint from the conf the query sees
+    at its first batch; these harness streams always begin from a fresh
+    checkpoint. The query clones the caller's session at ``start()``, so
+    the caller's conf is changed only across that call and restored right
+    after (serialized between concurrent callers). The query is NOT
+    started on a cloned session instead: listeners registered on the
+    caller's session would never see it."""
     spark = stream_df.sparkSession
-    prev = None
-    if shuffle_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(query_name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return stream_df.sparkSession.sql(f"SELECT * FROM {query_name}")
+    key = "spark.sql.shuffle.partitions"
+    writer = (
+        stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(query_name)
+        .trigger(availableNow=True)
+    )
+    with _START_LOCK:
+        # no default: an unset key reads as its effective value (200)
+        prev = spark.conf.get(key)
+        requested = shuffle_partitions if shuffle_partitions is not None else int(prev)
+        spark.conf.set(key, str(min(requested, spark.sparkContext.defaultParallelism)))
+        try:
+            q = writer.start()
+        finally:
+            spark.conf.set(key, prev)
+    q.processAllAvailable()
+    q.stop()
+    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def stateful_episode_counts(

@@ -73,3 +73,18 @@ def test_bitemporal_axes(spark, tmp_path):
     # keys 0,7,14,21 are corrected (k % 7 == 0): 4 of 28
     assert latest["n_corrected_effective"] == 4
     assert latest["sum_cents"] == 28 * 10000 + 4 * 50000
+
+
+def test_dynamic_overwrite_keeps_session_conf_and_oracle(spark):
+    from tools.selfcheck import compare, duck_conn
+
+    from tests.conftest import SF_ORACLE
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    # the effective value, and whether the key is set on the session at all
+    before = (spark.conf.get(key), spark.conf.getAll.get(key))
+    q = _q("s19_dynamic_partition_overwrite")
+    got = q.spark(spark, SF_ORACLE).toPandas()
+    assert (spark.conf.get(key), spark.conf.getAll.get(key)) == before
+    verdict, detail = compare(got, duck_conn(SF_ORACLE).execute(q.oracle).fetchdf())
+    assert verdict == "EXACT", detail
