@@ -92,16 +92,6 @@ def attack_group_expr(attack: Column | str, groups: dict[str, tuple[str, ...]] =
     return expr.otherwise(raw)
 
 
-def clip_expr(c: Column | str, lo: float | None = None, hi: float | None = None) -> Column:
-    """F13: clip/cap (class-weight cap, probability clip)."""
-    col = F.col(c) if isinstance(c, str) else c
-    if lo is not None:
-        col = F.greatest(col, F.lit(lo))
-    if hi is not None:
-        col = F.least(col, F.lit(hi))
-    return col
-
-
 def proba_pair_expr(p: Column | str) -> Column:
     """F15: 1-col probability → [1-p, p] array (pipeline_tests_power.py:76-84)."""
     col = F.col(p) if isinstance(p, str) else p

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from cicevse2024_tfm_datapipeline_spark.functions.scalars import BENIGN_LIKE, norm_str
 from cicevse2024_tfm_datapipeline_spark.operators.degrade import permute_feature_globally
-from cicevse2024_tfm_datapipeline_spark.operators.metrics import weighted_log_loss
 from cicevse2024_tfm_datapipeline_spark.operators.split import chrono_split
 
 
@@ -45,10 +44,6 @@ def permutation_importance(
         var = sum((d - mean) ** 2 for d in drops) / (n - 1) if n > 1 else 0.0
         results.append({"feature": feat, "mean_drop": mean, "std_drop": var**0.5})
     return sorted(results, key=lambda r: -r["mean_drop"])
-
-
-def log_loss_of(df: DataFrame, weight_col: str, p_true_col: str) -> float:
-    return weighted_log_loss(df, weight_col, p_true_col).collect()[0]["weighted_log_loss"]
 
 
 def attack_candidates(df: DataFrame, attack_col: str = "attack") -> list[str]:

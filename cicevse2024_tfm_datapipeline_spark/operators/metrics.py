@@ -438,12 +438,6 @@ def mean_std_over_runs(df: DataFrame, key_cols: list[str], value: str) -> DataFr
     )
 
 
-def fph_from_fpr(fpr_col, window_hop_seconds: float):
-    """A15: FPR → false-positives-per-hour conversion factor
-    (func_aux/func_test.py:377-403)."""
-    return fpr_col * F.lit(3600.0 / window_hop_seconds)
-
-
 # --- A14: exact Clopper-Pearson CI (scalar numerics) --------------------
 
 

@@ -246,18 +246,6 @@ def synthetic_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return docs.select(id_col).mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: expand each payload row into frame
-    timestamps (decode stubbed — emits the sampling plan, which is the
-    Spark-side part: one row per frame to extract, partitioned by media)."""
-    n_frames = (F.coalesce(F.col("duration_ms"), F.lit(0)) / F.lit(every_ms)).cast("int")
-    return media.select(
-        "media_id",
-        "media_type",
-        F.explode(F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)))).alias("frame_idx"),
-    ).withColumn("frame_ts_ms", F.col("frame_idx") * F.lit(every_ms))
-
-
 def resize_nearest(pixels: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     """Nearest-neighbor resize of an (H, W, C) array — pure integer index
     math, no interpolation libraries required."""

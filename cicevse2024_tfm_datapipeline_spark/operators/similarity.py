@@ -42,10 +42,6 @@ def norm_expr(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 def sign_bucket_expr(a: Column, n_dims: int = 8) -> Column:
     """Coarse quantizer: bucket = Σ (a[i] ≥ 0) << i over leading dims —
     axis-aligned random-hyperplane LSH (embeddings are already random

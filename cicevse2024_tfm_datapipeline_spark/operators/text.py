@@ -68,12 +68,6 @@ def langid_expr(tokens: Column, profiles: dict[str, tuple[str, ...]] = LANG_PROF
     return best["tag"]
 
 
-def punct_count_expr(text: Column | str) -> Column:
-    """Characters outside [A-Za-z0-9 ] — the punctuation mass."""
-    col = F.col(text) if isinstance(text, str) else text
-    return F.length(col) - F.length(F.regexp_replace(col, "[A-Za-z0-9 ]", ""))
-
-
 def quality_score_expr(text: Column, tokens: Column, stopwords: tuple[str, ...] = ("the", "a", "of", "and")) -> Column:
     """Composite quality score from length / punctuation / stopword ratios
     (the reference-style heuristic battery, fixed weights)."""

@@ -520,14 +520,6 @@ _NORM_SQL = """sqrt(list_reduce(list_transform(range(1, len({a}) + 1),
     tags=("similarity", "dedup", "lsh"),
 )
 def sim_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _srp_pairs(spark, sf_dir, with_audit=True)
-
-
-def _srp_pairs(spark: SparkSession, sf_dir: str, with_audit: bool = True) -> DataFrame:
-    """Body of sim_srp_lsh_pairs. ``with_audit=False`` builds the SAME
-    candidate/verify pipeline without the recall-contract audit columns —
-    ONLY for tools/srp_contract_ab.py's same-host A/B cost receipt (r10
-    verdict #3); every registered/oracled surface uses the audited plan."""
     emb = ensure_min_parallelism(t(spark, sf_dir, "embeddings"))
     vcol = as_double_array("embedding")
     # scale-aware width resolved at PLAN TIME from the parquet FOOTER row
@@ -625,11 +617,6 @@ def _srp_pairs(spark: SparkSession, sf_dir: str, with_audit: bool = True) -> Dat
         )
     )
     res = vf.filter(F.col("cosine") >= 0.35)
-    if not with_audit:
-        return res.select(
-            "id_a", "id_b", "hamming", "same_label",
-            pround("cosine", 6).alias("cosine"),
-        )
     # RECALL CONTRACT (round 10): measured recall vs the brute-force
     # ground truth over the audit slice (smaller id < _AUDIT_N) rides in
     # the hashed result — the sim_ivf_topk in_exact_topk pattern. The

@@ -86,12 +86,16 @@ def u_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value"),
         )
     )
-    d = a.select("event_id", F.col("value").alias("va")).join(
-        b.select("event_id", F.col("value").alias("vb")), "event_id", "full_outer"
+    # classify on the keys, not the values: a null value is not a
+    # missing row
+    d = a.select(F.col("event_id").alias("ka"), F.col("value").alias("va")).join(
+        b.select(F.col("event_id").alias("kb"), F.col("value").alias("vb")),
+        F.col("ka") == F.col("kb"),
+        "full_outer",
     )
     status = (
-        F.when(F.col("vb").isNull(), "removed")
-        .when(F.col("va").isNull(), "added")
+        F.when(F.col("kb").isNull(), "removed")
+        .when(F.col("ka").isNull(), "added")
         .when(F.col("va") != F.col("vb"), "changed")
         .otherwise("unchanged")
     )

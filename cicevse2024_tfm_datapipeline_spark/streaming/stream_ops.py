@@ -71,42 +71,6 @@ def _buffer_sorted_batch(pdf_iter, ts_col: str, tiebreak_col: str):
     return pdf.sort_values([ts_col, tiebreak_col], kind="mergesort")
 
 
-def read_events_stream(spark, sf_dir: str, schema=None) -> DataFrame:
-    """File-source stream over the synthetic events parquet — used by the
-    smoke tests (one-file micro-batch; production: Kafka/EventHub).
-
-    Timestamp columns are declared as long (int64 storage) and rebuilt
-    with ``timestamp_micros`` so the event-time column is TIMESTAMP (LTZ),
-    not TIMESTAMP_NTZ — ``withWatermark`` rejects NTZ event time."""
-    import pyspark.sql.types as T
-
-    if schema is not None:
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{sf_dir}")
-        )
-    # infer once from the batch reader (driver-side, footer only)
-    from cicevse2024_tfm_datapipeline_spark.sources.readers import load_table
-
-    batch = load_table(spark, sf_dir, "events").schema
-    ts_cols = [
-        f.name for f in batch.fields if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType))
-    ]
-    fields = [
-        T.StructField(f.name, T.LongType() if f.name in ts_cols else f.dataType, f.nullable)
-        for f in batch.fields
-    ]
-    stream = (
-        spark.readStream.schema(T.StructType(fields))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{sf_dir}")
-    )
-    for c in ts_cols:
-        stream = stream.withColumn(c, F.expr(f"timestamp_micros({c})"))
-    return stream
-
-
 def tumbling_avg_stream(events: DataFrame, window_sec: int = 86400, watermark: str = "1 day") -> DataFrame:
     """A16 streaming twin: tumbling event-time window average."""
     return (
@@ -119,25 +83,6 @@ def tumbling_avg_stream(events: DataFrame, window_sec: int = 86400, watermark: s
             "avg_value",
             "n_rows",
         )
-    )
-
-
-def sliding_window_stream(
-    events: DataFrame, length_sec: int, hop_sec: int, watermark: str = "1 day"
-) -> DataFrame:
-    """W3 streaming twin: sliding event-time windows (length, hop) with
-    per-window summary features — the streaming equivalent of the batch
-    trailing-frame featurization."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", f"{length_sec} seconds", f"{hop_sec} seconds"))
-        .agg(
-            F.avg("value").alias("value_mean"),
-            F.min("value").alias("value_min"),
-            F.max("value").alias("value_max"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .select(F.col("window.start").alias("window_start"), "value_mean", "value_min", "value_max", "n_rows")
     )
 
 

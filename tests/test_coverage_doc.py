@@ -6,8 +6,12 @@ from __future__ import annotations
 
 import os
 import re
+import sys
+
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 #: families whose underscore tokens in the doc are always query names
 #: (implementation pointers use module.function style and don't match)
@@ -54,10 +58,7 @@ def test_driver_window_contract():
     """The driver verifies the FIRST 50 entries of queries(): the
     priority prefix must be exactly 50 registered, duplicate-free names,
     every one carrying a DuckDB oracle (a rows-only query in the window
-    would burn a certification slot on a weaker check) — except the
-    explicitly allowlisted rows-only re-drives (_ROWS_ONLY_WINDOW_OK),
-    whose `no_oracle` driver rows are themselves the point (r05 verdict
-    missing #5: official "it ran, rows stable" evidence)."""
+    would burn a certification slot on a weaker check)."""
     from cicevse2024_tfm_datapipeline_spark import plans
     from cicevse2024_tfm_datapipeline_spark.plans import load_all
 
@@ -69,39 +70,66 @@ def test_driver_window_contract():
     assert not missing, f"_PRIORITY names not registered: {missing}"
     window = list(qs)[:50]
     assert window == [n for n in prio if n in qs]
-    allowed = getattr(plans, "_ROWS_ONLY_WINDOW_OK", frozenset())
-    no_oracle = [n for n in window if qs[n].oracle is None and n not in allowed]
+    no_oracle = [n for n in window if qs[n].oracle is None]
     assert not no_oracle, f"window entries without oracle: {no_oracle}"
-    # the allowlist itself must stay tight: every name must be registered
-    # (a typo'd/stale entry would silently weaken the "exactly these four"
-    # contract) and must genuinely be rows-only
-    unregistered = [n for n in allowed if n not in qs]
-    assert not unregistered, (
-        f"_ROWS_ONLY_WINDOW_OK lists unregistered names: {unregistered}"
-    )
-    bogus = [n for n in allowed if qs[n].oracle is not None]
-    assert not bogus, f"_ROWS_ONLY_WINDOW_OK lists oracled queries: {bogus}"
-
-
-def test_rotation_plans_resolve():
-    """Names queued for future windows (_R0x_PLAN) must exist —
-    a typo would silently shrink a future certification window."""
-    from cicevse2024_tfm_datapipeline_spark import plans
-    from cicevse2024_tfm_datapipeline_spark.plans import load_all
-
-    registry = set(load_all())
-    for plan_name in ("_R06_PLAN", "_R07_PLAN", "_R08_PLAN"):
-        plan = getattr(plans, plan_name, None)
-        if plan is None:
-            continue
-        missing = [n for n in plan if n not in registry]
-        assert not missing, f"{plan_name} names not registered: {missing}"
 
 
 #: committed official driver artifacts — enumerated EXPLICITLY (not
 #: globbed) so an uncommitted or future CORRECTNESS_r0x.json in the tree
 #: cannot silently change what these meta-tests pin (r07 ADVICE item).
 _ARTIFACT_ROUNDS = (1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11)
+
+#: the declared changed-plan re-drives (window rule item 2) that produced
+#: today's _PRIORITY, in priority order: every query whose plan or
+#: plan-building helper changed since its last driver row. The next window
+#: declares the names changed since then in their place.
+_LAST_CHANGED = [
+    "dedup_lsh_components",
+    "dedup_fuzzy_survivors",
+    "pipeline_fuzzy_corpus",
+    "dedup_golden_record",
+    "dedup_edit_distance_verify",
+    "dedup_mutual_best_match",
+    "dedup_containment_pairs",
+    "g_pagerank_lsh",
+    "g_triangle_count_lsh",
+    "g_clustering_coefficient",
+    "g_adamic_adar",
+    "g_kcore_two_rounds",
+    "g_bfs_levels_lsh",
+    "dedup_minhash_lsh_pairs",
+    "r5_hash_permutation",
+    "a_kaplan_meier",
+    "dedup_prefix_filter_jaccard",
+    "a_vif_multicollinearity",
+    "a11_multiclass_auc",
+    "a11_ovr_auc_per_class",
+    "j_salted_skew_join",
+    "a_pinball_loss_quantile_eval",
+    "a_quantile_treatment_effect",
+    "a_countmin_heavy_hitters",
+    "ml_gbm_two_stumps",
+    "a_cross_correlation_lags",
+    "m8_sample_size_grid",
+    "text_dedup_threshold_curve",
+    "sim_ivf_topk",
+    "dedup_semdedup_cells",
+    "sample_mixture_by_source",
+    "stream_static_join",
+    "sim_srp_lsh_pairs",
+    "a13_threshold_at_fpr",
+    "a13_roc_curve_points",
+    "a13_roc_auc",
+    "a13_average_precision",
+    "w6_sessionize_ttd",
+    "a_weighted_median",
+    "pack_concat_chunks",
+    "a_mann_whitney_u",
+    "a_mutual_information_ranking",
+    "f_quantile_normalize",
+    "a_psi_drift",
+    "ml_pca_power_iteration",
+]
 
 
 def _latest_driven_round() -> dict[str, int]:
@@ -148,25 +176,86 @@ def test_ledger_is_closed():
 def test_priority_window_matches_rotation_rule():
     """_PRIORITY must equal rotation_window(...) recomputed from the raw
     registration order, the oracle map, the committed CORRECTNESS
-    artifacts, and the declared _R12_CHANGED list — the _ROTATION_RULE
-    policy is executable, not prose."""
+    artifacts and _LAST_CHANGED: the window rule in tools/next_window.py
+    is executable, not prose."""
+    from next_window import rotation_window
+
     from cicevse2024_tfm_datapipeline_spark import plans
     from cicevse2024_tfm_datapipeline_spark.plans import load_all
     from cicevse2024_tfm_datapipeline_spark.plans.registry import registry
 
     load_all()
     reg = registry()  # raw registration order (unaffected by _PRIORITY)
-    expected = plans.rotation_window(
+    latest = _latest_driven_round()
+    expected = rotation_window(
         registration_order=list(reg),
         oracled={n for n, q in reg.items() if q.oracle is not None},
-        latest_round=_latest_driven_round(),
-        changed=plans._R12_CHANGED,
-        rows_only_ok=plans._ROWS_ONLY_WINDOW_OK,
+        latest_round=latest,
+        changed=_LAST_CHANGED,
     )
     assert plans._PRIORITY == expected
     # every changed-plan name must be spent on a real re-drive: registered
     # and previously driven (a never-driven name belongs to block 1)
-    latest = _latest_driven_round()
-    for name in plans._R12_CHANGED:
+    for name in _LAST_CHANGED:
         assert name in reg, name
-        assert name in latest, f"_R12_CHANGED lists never-driven {name}"
+        assert name in latest, f"_LAST_CHANGED lists never-driven {name}"
+
+
+def test_rotation_window_dedupes_changed_and_raises_on_overflow():
+    """Duplicate --changed names must not eat two window slots, and
+    declared re-drives overflowing the non-anchor slots must raise instead
+    of silently truncating (rule item 2's promise)."""
+    from next_window import rotation_window
+
+    order = [f"q{i:03d}" for i in range(80)]
+    oracled = set(order)
+    latest = {n: 1 for n in order}
+    anchors = ("q070", "q071")
+    win = rotation_window(
+        order,
+        oracled,
+        latest,
+        changed=["q005", "q005", "q009"],
+        anchors=anchors,
+        size=10,
+    )
+    assert win[:3] == ["q005", "q009", "q000"]  # deduped, one slot each
+    assert win[-2:] == list(anchors)
+    with pytest.raises(ValueError, match="overflow"):
+        rotation_window(
+            order,
+            oracled,
+            latest,
+            changed=[f"q{i:03d}" for i in range(20)],
+            anchors=anchors,
+            size=10,
+        )
+
+
+def test_rotation_window_never_driven_overflow_truncates():
+    """Never-driven names self-heal across rounds (a truncated block-1
+    name re-enters the next window), so a registration wave larger than
+    the free slots must TRUNCATE block 1: raising there would make
+    rotation_window permanently unable to produce any window, and
+    splitting the changed list cannot fix a block-1 overflow. Declared
+    re-drives keep their guaranteed slots even when block 1 overflows."""
+    from next_window import rotation_window
+
+    order = [f"q{i:03d}" for i in range(30)]
+    oracled = set(order)
+    anchors = ("q028", "q029")
+    # only q000/q001 ever driven -> 26 never-driven for 8 non-anchor slots
+    latest = {"q000": 1, "q001": 1}
+    win = rotation_window(
+        order,
+        oracled,
+        latest,
+        changed=["q000", "q001"],  # both previously driven -> re-drives
+        anchors=anchors,
+        size=10,
+    )
+    assert len(win) == 10 and win[-2:] == list(anchors)
+    # block 1 truncated to 6 oldest-registered never-driven names ...
+    assert win[:6] == ["q002", "q003", "q004", "q005", "q006", "q007"]
+    # ... while BOTH declared re-drives kept their promised slots
+    assert win[6:8] == ["q000", "q001"]

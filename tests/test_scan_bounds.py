@@ -368,66 +368,6 @@ def test_all_null_keys_and_boolean_keys(spark):
     assert pinned == bounds
 
 
-def test_rotation_window_dedupes_changed_and_raises_on_overflow():
-    """r08 ADVICE (low): duplicate --changed names must not eat two window
-    slots, and declared re-drives overflowing the non-anchor slots must
-    raise instead of silently truncating (rule item 2's promise)."""
-    from cicevse2024_tfm_datapipeline_spark import plans
-
-    order = [f"q{i:03d}" for i in range(80)]
-    oracled = set(order)
-    latest = {n: 1 for n in order}
-    anchors = ("q070", "q071")
-    win = plans.rotation_window(
-        order,
-        oracled,
-        latest,
-        changed=["q005", "q005", "q009"],
-        anchors=anchors,
-        size=10,
-    )
-    assert win[:3] == ["q005", "q009", "q000"]  # deduped, one slot each
-    assert win[-2:] == list(anchors)
-    with pytest.raises(ValueError, match="overflow"):
-        plans.rotation_window(
-            order,
-            oracled,
-            latest,
-            changed=[f"q{i:03d}" for i in range(20)],
-            anchors=anchors,
-            size=10,
-        )
-
-
-def test_rotation_window_never_driven_overflow_truncates():
-    """r09 ADVICE (low): never-driven names self-heal across rounds (a
-    truncated block-1 name re-enters the next window), so a registration
-    wave larger than the free slots must TRUNCATE block 1 — raising there
-    would make rotation_window permanently unable to produce any window,
-    and 'split the changed list' cannot fix a block-1 overflow. Declared
-    re-drives keep their guaranteed slots even when block 1 overflows."""
-    from cicevse2024_tfm_datapipeline_spark import plans
-
-    order = [f"q{i:03d}" for i in range(30)]
-    oracled = set(order)
-    anchors = ("q028", "q029")
-    # only q000/q001 ever driven -> 26 never-driven for 8 non-anchor slots
-    latest = {"q000": 1, "q001": 1}
-    win = plans.rotation_window(
-        order,
-        oracled,
-        latest,
-        changed=["q000", "q001"],  # both previously driven -> re-drives
-        anchors=anchors,
-        size=10,
-    )
-    assert len(win) == 10 and win[-2:] == list(anchors)
-    # block 1 truncated to 6 oldest-registered never-driven names ...
-    assert win[:6] == ["q002", "q003", "q004", "q005", "q006", "q007"]
-    # ... while BOTH declared re-drives kept their promised slots
-    assert win[6:8] == ["q000", "q001"]
-
-
 @pytest.mark.parametrize(
     "table,column,scale",
     [("events", "ts", 1.0), ("events", "value", 10000.0), ("documents", "doc_id", 1.0)],

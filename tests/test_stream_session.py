@@ -2,8 +2,8 @@
 ``min(requested, defaultParallelism)``, the conf changed only across
 ``start()`` (restored even when the key was never set, and under
 concurrent callers), listeners on the caller's session still seeing the
-stream, and an AST guard against new session-conf writes in library
-code."""
+stream, a failing stream raising, and an AST guard against new
+session-conf writes in library code."""
 
 from __future__ import annotations
 
@@ -12,6 +12,9 @@ import os
 import threading
 import time
 
+import pytest
+from pyspark.errors import StreamingQueryException
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 from cicevse2024_tfm_datapipeline_spark.streaming.stream_ops import (
@@ -189,3 +192,21 @@ def test_no_session_conf_writes_outside_allowlist():
         f"allowlist {sorted(_CONF_WRITE_ALLOWLIST)}: {found}; use a "
         "per-read/per-write option instead"
     )
+
+
+def test_failing_stream_raises_from_run_to_completion(spark):
+    """A stream whose batch fails raises out of ``run_to_completion``
+    (``processAllAvailable`` rethrows the query's exception) instead of
+    returning an empty sink, and leaves the session conf and the active
+    streams as they were."""
+
+    @F.udf("double")
+    def boom(v):
+        raise ValueError("stream batch failure")
+
+    before = spark.conf.get(KEY)
+    stream = _events(spark).select(boom("value").alias("v"))
+    with pytest.raises(StreamingQueryException, match="stream batch failure"):
+        run_to_completion(stream, "t_failing_stream")
+    assert spark.conf.get(KEY) == before
+    assert "t_failing_stream" not in [q.name for q in spark.streams.active]

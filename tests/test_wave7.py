@@ -90,3 +90,29 @@ def test_negative_pairs_deterministic_and_disjoint(spark, tmp_path):
     for anchor, pairs in per_anchor.items():
         assert [rk for rk, _ in sorted(pairs)] == list(range(1, len(pairs) + 1))
         assert len(pairs) <= 3
+
+
+def test_table_diff_null_value_is_not_a_removed_row(spark, tmp_path):
+    """A null value in a row present in both snapshots is 'unchanged' (the
+    oracle's SQL comparison gives NULL, not true), never 'removed': the
+    Spark plan must classify on the keys, as the DuckDB oracle does."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tools.selfcheck import compare, duck_conn
+
+    src = "/root/testdata/sf0.001/events.parquet"
+    table = pq.read_table(src)
+    value = table.column("value").to_numpy(zero_copy_only=False)
+    nulls = np.random.default_rng(7).random(len(value)) < 0.1
+    table = table.set_column(
+        table.schema.get_field_index("value"),
+        "value",
+        pa.array(value, mask=nulls, type=pa.float64()),
+    )
+    pq.write_table(table, tmp_path / "events.parquet")
+    q = _q("u_table_diff")
+    got = q.spark(spark, str(tmp_path)).toPandas()
+    want = duck_conn(str(tmp_path)).execute(q.oracle).fetchdf()
+    assert compare(got, want)[0] == "EXACT", (got, want)
