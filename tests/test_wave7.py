@@ -2,6 +2,7 @@
 epoch day-of-week math, negative-sampling determinism."""
 
 import datetime
+import os
 
 
 def _q(name):
@@ -100,10 +101,10 @@ def test_table_diff_null_value_is_not_a_removed_row(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from tests.conftest import SF_SMOKE
     from tools.selfcheck import compare, duck_conn
 
-    src = "/root/testdata/sf0.001/events.parquet"
-    table = pq.read_table(src)
+    table = pq.read_table(os.path.join(SF_SMOKE, "events.parquet"))
     value = table.column("value").to_numpy(zero_copy_only=False)
     nulls = np.random.default_rng(7).random(len(value)) < 0.1
     table = table.set_column(
