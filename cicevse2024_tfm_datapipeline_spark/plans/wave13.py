@@ -31,7 +31,6 @@ from cicevse2024_tfm_datapipeline_spark.plans.extensions import (
     NUM_HASHES,
     _band_sql,
     _sig_sql,
-    _SHINGLES3,
     _TOKS,
 )
 from cicevse2024_tfm_datapipeline_spark.plans.registry import register

@@ -231,24 +231,20 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "when many users simply have not converted YET (dropping them, as "
     "a plain percentile does, biases the curve optimistic). The "
     "product Π(1 - d_i/n_i) runs in LOG space as an exact integer "
-    "cumsum of 1e-9-ticked ln factors over the two-phase global scan — "
-    "no unpartitioned window, no order-dependent float product; risk "
-    "sets come from the same scan's lagged (d+c) cumsum against the "
-    "broadcast cohort total. Both the risk-set denominators and event "
-    "counts are exact integers; the exhausted-risk-set edge (d = n) "
-    "caps the tick at e^-50 ~ 0. First 30 event times shown (integer "
-    "rank cut).",
+    "cumsum of 1e-9-ticked ln factors — no order-dependent float "
+    "product. Only the first 30 event times are shown, so they are "
+    "taken FIRST (a bounded top-30 heap over the per-offset cells) and "
+    "everything after runs on those 30 rows: each risk set is the "
+    "cohort total minus the observations strictly before it (one "
+    "aggregate over cells x the broadcast 30 times; a user with no "
+    "timestamp stays at risk, as in the oracle's NULLS LAST order), and "
+    "the log cumsum is a broadcast triangle join — no range exchange, "
+    "no window. Both the risk-set denominators and event counts are "
+    "exact integers; the exhausted-risk-set edge (d = n) caps the tick "
+    "at e^-50 ~ 0.",
     tags=("A", "survival", "kaplan-meier"),
 )
 def a_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    from cicevse2024_tfm_datapipeline_spark.operators.scan import (
-        PID,
-        offsets_from_totals,
-        range_bucketed,
-    )
-
     us = F.expr(_US)
     per_user = (
         t(spark, sf_dir, "events")
@@ -273,80 +269,59 @@ def a_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("t_ms"),
         F.when(F.col("tp").isNotNull(), 1).otherwise(0).alias("ev"),
     )
-    cells = obs.groupBy("t_ms").agg(
-        F.sum("ev").cast("long").alias("d"),
-        (F.count(F.lit(1)) - F.sum("ev")).cast("long").alias("c"),
+    # one row per offset (domain-sized) with two consumers: pinned so the
+    # per-user aggregate runs once (the consumers prune different columns,
+    # so no exchange reuse would apply)
+    cells = (
+        obs.groupBy("t_ms")
+        .agg(
+            F.sum("ev").cast("long").alias("d"),
+            F.count(F.lit(1)).alias("dc"),
+        )
+        .localCheckpoint(eager=False)
     )
-    cells = cells.withColumn("dc", F.col("d") + F.col("c"))
-    # r12 fold (guide §2.4): the two stacked global cumsums share the
-    # SAME scan order (t_ms), so ONE pinned range exchange serves both.
-    # The old shape ran a second full two-phase scan over the derived
-    # risk frame — a second range exchange (whose RangePartitioner
-    # SAMPLES its input, re-executing the first scan's window chain per
-    # build), a second localCheckpoint planning pass and materialization.
-    # Now: the first cumsum's window output is hash-partitioned by PID
-    # and sorted (PID, t_ms), and broadcast joins preserve both, so the
-    # second cumsum's window layer adds NO exchange and NO sort; its
-    # cross-partition offsets come from the same offsets_from_totals
-    # combine over a per-PID re-aggregation (domain-sized, reads the
-    # same pin). Equivalence: a cumsum over the d>0-filtered subset
-    # ordered by t_ms equals the conditional cumsum over all cells
-    # restricted to d>0 rows (excluded rows contribute exact-integer
-    # zeros), and any monotone bucketing serves the prefix combine —
-    # PID from the first pass is monotone in t_ms by construction.
-    b = range_bucketed(cells, ["t_ms"])
-    w_cum = (
-        W.partitionBy(PID)
-        .orderBy(F.col("t_ms").asc())
-        .rowsBetween(W.unboundedPreceding, 0)
+    # top-30 first: only the 30 smallest event times are ever shown
+    first = (
+        cells.filter(F.col("d") > 0)
+        .orderBy("t_ms")
+        .limit(30)
+        .select(F.col("t_ms").alias("t"))
     )
-    loc = b.withColumn("__loc_dc", F.sum("dc").over(w_cum))
-    tot1 = b.groupBy(PID).agg(F.sum("dc").alias("__tot_dc"))
-    offs1 = offsets_from_totals(tot1, ["__tot_dc"], prefix="__o_")
-    grand = tot1.agg(F.sum("__tot_dc").alias("tot_dc"))
+    # n_risk(t) = N - (observations before t); N also counts a null-offset
+    # user, whom the oracle's NULLS LAST order never subtracts
     risk = (
-        loc.join(F.broadcast(offs1), PID)
-        .crossJoin(F.broadcast(grand))
-        .withColumn("cum_dc", F.col("__loc_dc") + F.col("__o___tot_dc"))
-        .withColumn(
-            "n_risk", F.col("tot_dc") - (F.col("cum_dc") - F.col("dc"))
+        cells.crossJoin(F.broadcast(first))
+        .groupBy("t")
+        .agg(
+            F.sum(F.when(F.col("t_ms") == F.col("t"), F.col("d"))).alias("d"),
+            (
+                F.sum("dc")
+                - F.sum(F.when(F.col("t_ms") < F.col("t"), F.col("dc")).otherwise(0))
+            ).alias("n_risk"),
         )
     )
-    # per-row log-tick, zeroed on non-event rows OUTSIDE the whole
-    # expression (d = 0 with an exhausted risk set would otherwise take
-    # the d >= n_risk cap branch)
-    lt_raw = F.when(F.col("d") >= F.col("n_risk"), F.lit(-50000000000)).otherwise(
+    # exhausted-risk-set edge (d = n) caps the tick at e^-50
+    lt = F.when(F.col("d") >= F.col("n_risk"), F.lit(-50000000000)).otherwise(
         F.floor(
             F.log(F.lit(1.0) - F.col("d") * F.lit(1.0) / F.col("n_risk"))
             * 1000000000
             + F.lit(0.5)
         ).cast("long")
     )
-    ev = risk.withColumn(
-        "lt0", F.when(F.col("d") > 0, lt_raw).otherwise(F.lit(0).cast("long"))
-    ).withColumn("one0", (F.col("d") > 0).cast("long"))
-    loc2 = ev.withColumn("__loc_lt", F.sum("lt0").over(w_cum)).withColumn(
-        "__loc_one", F.sum("one0").over(w_cum)
-    )
-    tot2 = ev.groupBy(PID).agg(
-        F.sum("lt0").alias("__t_lt"), F.sum("one0").alias("__t_one")
-    )
-    offs2 = offsets_from_totals(tot2, ["__t_lt", "__t_one"], prefix="__o2_")
+    # cum_lt(t) = sum of lt(u) over u <= t: a triangle over <= 30 rows
     km = (
-        loc2.join(F.broadcast(offs2), PID)
-        .withColumn("cum_lt", F.col("__loc_lt") + F.col("__o2___t_lt"))
-        .withColumn("cum_one", F.col("__loc_one") + F.col("__o2___t_one"))
-    )
-    return (
-        km.filter((F.col("d") > 0) & (F.col("cum_one") <= 30))
-        .select(
-            "t_ms",
-            F.col("n_risk").cast("long").alias("n_risk"),
-            F.col("d").alias("n_events"),
-            pround(F.exp(F.col("cum_lt") / F.lit(1000000000.0)), 6).alias(
-                "survival"
-            ),
+        risk.join(
+            F.broadcast(risk.select(F.col("t").alias("u"), lt.alias("lt_u"))),
+            F.col("u") <= F.col("t"),
         )
+        .groupBy("t", "n_risk", "d")
+        .agg(F.sum("lt_u").alias("cum_lt"))
+    )
+    return km.select(
+        F.col("t").alias("t_ms"),
+        "n_risk",
+        F.col("d").alias("n_events"),
+        pround(F.exp(F.col("cum_lt") / F.lit(1000000000.0)), 6).alias("survival"),
     )
 
 

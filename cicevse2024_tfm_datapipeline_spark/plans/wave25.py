@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from cicevse2024_tfm_datapipeline_spark.plans.common import pround, t
+from cicevse2024_tfm_datapipeline_spark.plans.common import t
 from cicevse2024_tfm_datapipeline_spark.plans.extensions import _TOKS
 from cicevse2024_tfm_datapipeline_spark.plans.registry import register
 

@@ -15,11 +15,7 @@ from cicevse2024_tfm_datapipeline_spark.operators.scan import footer_grid
 from cicevse2024_tfm_datapipeline_spark.operators.sessionize import ttd_stats
 from cicevse2024_tfm_datapipeline_spark.operators.split import chrono_split
 from cicevse2024_tfm_datapipeline_spark.operators.topk import group_mode, top_k
-from cicevse2024_tfm_datapipeline_spark.operators.windows import (
-    apply_standardizer,
-    fit_standardizer,
-    standardize_via_join,
-)
+from cicevse2024_tfm_datapipeline_spark.operators.windows import standardize_via_join
 from cicevse2024_tfm_datapipeline_spark.plans.common import POWER_BASE_SQL, power_view, split_sql, t, pround
 from cicevse2024_tfm_datapipeline_spark.plans.registry import register
 

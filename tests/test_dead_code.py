@@ -3,7 +3,10 @@
 in the package, the tests, the tools, the benchmark, ``bench.py`` or the
 driver entry module. A helper whose last caller goes away fails here
 instead of lingering. The match is a plain word-boundary search, so a
-name used through ``getattr`` or a tracing target string also counts."""
+name used through ``getattr`` or a tracing target string also counts.
+
+Module-level imports get the same guard, per module: an imported name that
+its module never reads fails here."""
 
 from __future__ import annotations
 
@@ -60,3 +63,36 @@ def test_no_unreferenced_top_level_functions():
             if uses[name] == defs[name] and (rel, name) not in _UNREFERENCED_ALLOWLIST:
                 dead.append(f"{rel}:{node.lineno} {name}")
     assert not dead, f"top-level functions referenced nowhere: {dead}"
+
+
+#: (module path relative to the package, imported name) kept on purpose
+_UNUSED_IMPORT_ALLOWLIST: set[tuple[str, str]] = set()
+
+
+def _bound_names(node: ast.Import | ast.ImportFrom):
+    for alias in node.names:
+        if alias.name == "*":
+            continue
+        yield alias.asname or alias.name.split(".")[0]
+
+
+def test_no_unused_module_level_imports():
+    """Every name a package module imports at its top level is read as an
+    ``ast.Name`` somewhere in that module (f-string fields included)."""
+    unused = []
+    for path in _py_files(PKG):
+        if os.path.basename(path) == "__init__.py":
+            continue
+        rel = os.path.relpath(path, PKG)
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        names = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in tree.body:
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            for name in _bound_names(node):
+                if name not in names and (rel, name) not in _UNUSED_IMPORT_ALLOWLIST:
+                    unused.append(f"{rel}:{node.lineno} {name}")
+    assert not unused, f"module-level imports never used: {unused}"

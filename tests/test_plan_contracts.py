@@ -90,6 +90,36 @@ def test_top_ngrams_uses_heap_not_global_sort(spark):
     assert "TakeOrderedAndProject" in plan
 
 
+def _pinned_rdd_ids(node) -> list[int]:
+    """RDD ids of every ``Scan ExistingRDD`` in a physical plan, looking
+    through query stages (a stage's plan is not one of its children)."""
+    name = node.getClass().getSimpleName()
+    if name == "RDDScanExec":
+        return [node.rdd().id()]
+    if name.endswith("QueryStageExec"):
+        return _pinned_rdd_ids(node.plan())
+    children = node.children()
+    return [i for k in range(children.size()) for i in _pinned_rdd_ids(children.apply(k))]
+
+
+def test_kaplan_meier_cuts_to_first_30_before_scanning(spark):
+    # the 30 shown event times are taken first (a bounded heap), and the
+    # risk sets and survival are computed for those rows only: no global
+    # range exchange, no prefix-sum window, one pinned cells frame
+    from cicevse2024_tfm_datapipeline_spark.plans import load_all
+
+    df = load_all()["a_kaplan_meier"].spark(spark, SF)
+    df.collect()
+    adaptive = df._jdf.queryExecution().executedPlan()
+    # AdaptiveSparkPlan prints the final plan, then the initial one
+    final = adaptive.toString().split("== Initial Plan ==")[0]
+    assert "rangepartitioning" not in final
+    assert "Window" not in final
+    assert "TakeOrderedAndProject" in final
+    pins = _pinned_rdd_ids(adaptive.executedPlan())
+    assert pins and len(set(pins)) == 1, pins
+
+
 def test_no_unpartitioned_window_in_oracle_queries(spark):
     """SCALE.md's strongest claim, enforced: no oracle-checked plan may
     contain a WindowExec with an empty partition spec (the 'No Partition

@@ -65,6 +65,56 @@ def test_kaplan_meier_matches_handrolled(spark, tmp_path):
         assert abs(r["survival"] - s) < 1e-6
 
 
+def test_kaplan_meier_user_without_timestamp_stays_at_risk(spark, tmp_path):
+    """A user whose events all lack a timestamp has a null offset. The
+    oracle counts that user in every risk set (DuckDB sorts nulls last, so
+    the null cell never precedes an event time); the Spark plan must not
+    subtract it either. 44 distinct event times, so the 30-row cut is on."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tools.selfcheck import compare, duck_conn
+
+    t0 = datetime.datetime(2024, 3, 1)
+    rows = []
+
+    def add(user, offsets_types):
+        for off_min, et in offsets_types:
+            ts = None if off_min is None else t0 + datetime.timedelta(minutes=off_min)
+            rows.append((len(rows), ts, user, et, 1.0, "{}"))
+
+    # the hand-rolled fixture above
+    for u, off in [(1, 10), (2, 10), (3, 20), (4, 30), (5, 30), (6, 40)]:
+        add(u, [(0, "view"), (off, "purchase")])
+    for u, off in [(7, 15), (8, 25), (9, 25), (10, 50)]:
+        add(u, [(0, "view"), (off, "click")])
+    # 40 converters at distinct offsets, a censored user between each pair
+    for k in range(40):
+        add(100 + k, [(0, "view"), (60 + 2 * k, "purchase")])
+        add(200 + k, [(0, "view"), (61 + 2 * k, "click")])
+    add(999, [(None, "view"), (None, "purchase")])
+    schema = pa.schema(
+        [
+            ("event_id", pa.int64()),
+            ("ts", pa.timestamp("us")),
+            ("user_id", pa.int64()),
+            ("event_type", pa.string()),
+            ("value", pa.float64()),
+            ("props", pa.string()),
+        ]
+    )
+    pq.write_table(
+        pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema),
+        tmp_path / "events.parquet",
+    )
+    q = _q("a_kaplan_meier")
+    got = q.spark(spark, str(tmp_path)).toPandas()
+    want = duck_conn(str(tmp_path)).execute(q.oracle).fetchdf()
+    assert len(want) == 30
+    assert want["n_risk"].max() == 91  # 90 timed users + the null-offset one
+    assert compare(got, want)[0] == "EXACT", (got, want)
+
+
 def test_shapley_dummy_and_efficiency(spark, tmp_path):
     # construct the game v(S) = 0.5*[view in S] + 0.25*[click in S]:
     # signup is a DUMMY channel -> its Shapley credit must be exactly 0;
