@@ -1,19 +1,14 @@
 """W7: autocorrelation of a demeaned series (SURVEY §2.6).
 
 Reference (func_aux/func_plot.py:43-54): full ACF of x - mean(x) up to
-max_lag, normalized by lag-0 energy.
+max_lag, normalized by lag-0 energy, over ONE global series.
 
-Spark shape:
-- per-group series (``partition_cols``): each lag is a partitioned window
-  shift, all computed in one shuffle by the series key; the demean is a
-  frame-less window avg over the same partitioning.
-- the reference's single GLOBAL series: no unpartitioned window. A global
-  row index from the two-phase prefix scan (operators.scan), then every
-  lag-k cross product is an equi-join of the series against itself shifted
-  by k on that index — one hash-shuffle join for ALL lags at once (the
-  shifted side explodes the lag set), fully parallel at any scale. The
-  demean is a broadcast cross-join of the 1-row mean (lazy, no driver
-  round-trip).
+Spark shape, with no unpartitioned window: a global row index from the
+two-phase prefix scan (operators.scan), then every lag-k cross product is
+an equi-join of the series against itself shifted by k on that index —
+one hash-shuffle join for ALL lags at once (the shifted side explodes the
+lag set), fully parallel at any scale. The demean is a broadcast
+cross-join of the 1-row mean (no driver round-trip).
 """
 
 from __future__ import annotations
@@ -21,45 +16,14 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 
-def _acf_partitioned(
-    df: DataFrame,
-    value_col: str,
-    order_cols: Sequence[str],
-    lags: Sequence[int],
-    partition_cols: Sequence[str],
-) -> DataFrame:
-    order = [F.col(c).asc() for c in order_cols]
-    win = W.partitionBy(*partition_cols).orderBy(*order)
-    mean_win = W.partitionBy(*partition_cols)
-    x = (F.col(value_col) - F.avg(value_col).over(mean_win)).alias("__x")
-
-    demeaned = df.select(*df.columns, x)
-    aggs = [F.sum(F.col("__x") * F.col("__x")).alias("__e0")]
-    shifted = demeaned
-    for k in lags:
-        if k == 0:
-            continue
-        shifted = shifted.withColumn(f"__x_{k}", F.lag("__x", k).over(win))
-        aggs.append(F.sum(F.col("__x") * F.col(f"__x_{k}")).alias(f"__e{k}"))
-    energies = shifted.groupBy(*partition_cols).agg(*aggs)
-
-    pairs = []
-    for k in lags:
-        val = F.lit(1.0) if k == 0 else F.col(f"__e{k}") / F.col("__e0")
-        pairs.append(F.struct(F.lit(k).alias("lag"), val.alias("acf_value")))
-    exploded = energies.select(
-        *partition_cols, F.explode(F.array(*pairs)).alias("__p")
-    )
-    return exploded.select(*partition_cols, F.col("__p.lag"), F.col("__p.acf_value"))
-
-
-def _acf_global(
+def acf(
     df: DataFrame, value_col: str, order_cols: Sequence[str], lags: Sequence[int]
 ) -> DataFrame:
+    """Rows (lag, acf_value) of the series ``value_col`` in the global
+    ``order_cols`` order, demeaned by its global mean. lag 0 → 1.0."""
     from cicevse2024_tfm_datapipeline_spark.operators.scan import global_cumsum
 
     mean_df = df.agg(F.avg(value_col).alias("__mu"))
@@ -100,20 +64,3 @@ def _acf_global(
         result = result.unionByName(r)
     return result
 
-
-def acf(
-    df: DataFrame,
-    value_col: str,
-    order_cols: Sequence[str],
-    lags: Sequence[int],
-    partition_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Rows (lag, acf_value) per partition group. lag 0 → 1.0.
-
-    Demeaning is per series: with ``partition_cols`` each group subtracts
-    its OWN mean; without, the reference's single global series demeans by
-    the global mean (broadcast 1-row cross-join).
-    """
-    if partition_cols:
-        return _acf_partitioned(df, value_col, order_cols, lags, partition_cols)
-    return _acf_global(df, value_col, order_cols, lags)

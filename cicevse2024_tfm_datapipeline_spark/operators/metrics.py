@@ -155,8 +155,8 @@ def _threshold_cum_counts(
 
     ``domain_bounds``: a literal bucket-boundary grid the caller derives
     from CONSTRUCTION knowledge of the score domain (e.g. a 3-decimal
-    rounding of a bounded ratio — the binary twin of
-    ``ovr_auc_per_class``'s ``bounded_curves``). It is the scan's
+    rounding of a bounded ratio — the binary twin of the bounded class
+    curves ``ovr_auc_per_class`` assumes). It is the scan's
     ``fixed_bounds``: the lineage-free bounds bucketing, no pin and no
     sampling job (SCALE.md "A13 profile"). Leave None for
     continuous/unknown-domain scores: the scan then takes the pinned
@@ -307,16 +307,16 @@ def _auc_ap_aggs(ok) -> tuple:
     return area, ap
 
 
-def _per_class_auc(
-    per_score: DataFrame, class_col: str, bounded_curves: bool = False
-) -> DataFrame:
+def _per_class_auc(per_score: DataFrame, class_col: str) -> DataFrame:
     """Grouped cumulative scan + per-class ROC-AUC / AP aggregation.
 
-    Scale shape: operators.scan.grouped_cumsum range-partitions on
-    (class, threshold), so even ONE class's full curve spreads across
-    partitions — per-class OVR curves are embarrassingly parallel and no
-    class is ever a single task (reference computes these with sklearn on
-    a driver-sized array, func_aux/func_test.py:61-171)."""
+    Each class curve is assumed to be bounded by the distinct-score
+    domain (scores rounded or discretized, so a class holds at most one
+    row per distinct threshold). The scan is then one class-partitioned
+    window (``grouped_cumsum(small_groups=True)``): one shuffle by class,
+    classes evaluate in parallel (reference computes these with sklearn
+    on a driver-sized array, func_aux/func_test.py:61-171). A continuous
+    score with data-sized class curves would put each class in one task."""
     from cicevse2024_tfm_datapipeline_spark.operators.scan import grouped_cumsum
 
     cum = grouped_cumsum(
@@ -326,10 +326,7 @@ def _per_class_auc(
         ["pos", "neg", "cnt"],
         descending=True,
         with_totals=True,
-        # bounded_curves: callers whose scores are rounded/discretized
-        # cap each class curve at the threshold-domain size, so the
-        # plain class-partitioned window is the right plan at any scale
-        small_groups=bounded_curves,
+        small_groups=True,
     )
     # zero-pos/neg classes → null AUC/AP (sklearn NaN + warning)
     ok = (F.col("tot_neg") > 0) & (F.col("tot_pos") > 0)
@@ -344,7 +341,6 @@ def ovr_auc_per_class(
     class_col: str,
     y_true: str,
     score: str,
-    bounded_curves: bool = False,
 ) -> DataFrame:
     """A11 one-vs-rest probability AUCs: per-class ROC-AUC (trapezoid)
     and average precision over a LONG frame of (class, indicator, score)
@@ -354,10 +350,9 @@ def ovr_auc_per_class(
 
     Same lag-free trapezoid/AP arithmetic as the binary operators, summed
     per class — one grouped scan, one groupBy; classes evaluate in
-    parallel."""
-    return _per_class_auc(
-        _ovr_per_score(df, class_col, y_true, score), class_col, bounded_curves
-    )
+    parallel. A class curve is assumed to be bounded by the distinct-score
+    domain (see ``_per_class_auc``)."""
+    return _per_class_auc(_ovr_per_score(df, class_col, y_true, score), class_col)
 
 
 def ovr_auc_summary(
@@ -365,16 +360,19 @@ def ovr_auc_summary(
     class_col: str,
     y_true: str,
     score: str,
-    bounded_curves: bool = False,
     micro_domain_bounds=None,
 ) -> DataFrame:
     """A11 multiclass probability-AUC battery: macro ROC-AUC / PR-AUC
     (mean of per-class values) and micro ROC-AUC / PR-AUC (binary metrics
     over the flattened (class, indicator, score) frame) — the reference's
     ``average='macro'/'micro'`` variants (func_aux/func_test.py:120-171).
+    As in ``ovr_auc_per_class``, a class curve is assumed to be bounded by
+    the distinct-score domain.
 
     One row out. Both sides derive from ONE per-(class, threshold) count
-    frame, which is PINNED (lazy local checkpoint) before branching: the
+    frame, which is PINNED (``localCheckpoint(eager=False)``; not lazy
+    under AQE — building ``a11_multiclass_auc`` at sf0.001 runs 3 Spark
+    jobs before any action) before branching: the
     macro side's grouped scan and the micro side's threshold re-group
     each materialize through their own checkpointed subtree, so without
     the pin the base-data scan + first aggregation would execute twice —
@@ -391,7 +389,7 @@ def ovr_auc_summary(
     per_score = _ovr_per_score(df, class_col, y_true, score).localCheckpoint(
         eager=False
     )
-    macro = _per_class_auc(per_score, class_col, bounded_curves).agg(
+    macro = _per_class_auc(per_score, class_col).agg(
         F.avg("roc_auc").alias("roc_auc_macro"),
         F.avg("average_precision").alias("pr_auc_macro"),
     )
@@ -401,8 +399,8 @@ def ovr_auc_summary(
         F.sum("cnt").alias("cnt"),
     )
     # micro_domain_bounds (round 10): when the caller knows the score
-    # DOMAIN by construction (same knowledge bounded_curves asserts for
-    # the macro side), the literal grid gives the lineage-free bounds
+    # DOMAIN by construction (the bound the macro side assumes for its
+    # class curves), the literal grid gives the lineage-free bounds
     # scan (SCALE.md "A13 profile"); None gives the pinned range exchange
     mcum = global_cumsum(
         mper,

@@ -27,10 +27,11 @@ mode argument:
   - no grid (``None``) gives :func:`range_bucketed` — the pinned range
     exchange, which samples its own bounds and splits tie groups.
 
-Used by operators/metrics.py (ROC/PR cumulative curves) and
-operators/sessionize.py (global gaps-and-islands) — the two places the
-reference's semantics genuinely demand a total order
-(func_aux/func_test.py:196-249, :429-458) — and by sequential ingest ids
+Used by operators/metrics.py (ROC/PR cumulative curves),
+operators/sessionize.py (the fused time-to-detect segment scan) and
+operators/acf.py (the global row index) — the places the reference's
+semantics genuinely demand a total order (func_aux/func_test.py:196-249,
+:429-458; func_aux/func_plot.py:43-54) — and by sequential ingest ids
 (sources/readers.py).
 """
 
@@ -65,7 +66,7 @@ def _n_range_parts(df: DataFrame) -> int:
 
 
 def _pin_buckets(bucketed: DataFrame) -> DataFrame:
-    """Materialize the bucketed frame ONCE (lazy local checkpoint).
+    """Materialize the bucketed frame ONCE (``localCheckpoint(eager=False)``).
 
     The scan's correctness requires every consumer (the per-partition
     window pass, the totals pass, the offsets branch) to see the
@@ -76,12 +77,17 @@ def _pin_buckets(bucketed: DataFrame) -> DataFrame:
     partitions, and spark_partition_id() disagrees across branches —
     observed at sf0.1 as a silently corrupted permutation (an inner
     join on derived ranks dropping a handful of rows, varying run to
-    run). The lazy localCheckpoint freezes the physical partitioning:
+    run). The localCheckpoint freezes the physical partitioning:
     one materialization, every branch reads the same partitions. It
     also removes the former 3x re-execution of the child subtree —
     the price is one persisted copy of the scan input (the standard
     cost of a multi-consumer pass; lineage is truncated like the
-    connected-components fixpoint already does)."""
+    connected-components fixpoint already does).
+
+    ``eager=False`` does not make the pin lazy under AQE: creating the
+    checkpointed frame builds its RDD, and the adaptive plan runs the
+    range exchange's upstream stages as Spark jobs to do so — at frame
+    construction, before any action (tests/test_scan.py pins this)."""
     return bucketed.localCheckpoint(eager=False)
 
 
@@ -96,9 +102,11 @@ def range_bucketed(
     ``PID`` is monotone in the scan order — the bucket key for phase-2
     windows and the join key for prefix offsets.
 
+    With ``pin`` (the default) the frame is checkpointed
+    (:func:`_pin_buckets`), so building it already runs Spark jobs.
     ``pin=False`` skips the checkpoint — ONLY valid when the caller
     feeds the bucketed frame into a single consumer and pins THAT
-    consumer instead (e.g. sessionize pins the post-window pass so the
+    consumer instead (sessionize pins its per-segment aggregate, so the
     sort+window subtree runs once); the correctness requirement is that
     exactly one materialization of the range exchange exists, wherever
     the checkpoint sits."""
@@ -410,7 +418,6 @@ def global_cumsum(
     order_cols: Sequence[str],
     sum_cols: Sequence[str],
     descending: bool = False,
-    keep_pid: bool = False,
     with_totals: bool = False,
     fixed_bounds: Sequence[float] | None = None,
 ) -> DataFrame:
@@ -433,8 +440,9 @@ def global_cumsum(
     job; the same literals hold at any corpus size because the domain,
     not the data, defines them (see its docstring for the tie-skew
     tradeoff). ``None`` gives the pinned range exchange: the bucketed
-    frame is lazily checkpointed (see ``_pin_buckets`` — required for
-    correctness, not just speed), so the input subtree executes once and
+    frame is checkpointed (see ``_pin_buckets`` — required for
+    correctness, not just speed; its jobs run when this frame is
+    built, not at the first action), so the input subtree executes once and
     every branch (window pass, totals, offsets) reads the same
     materialized partitions. Results are identical; the plans differ in
     recovery/storage behavior.
@@ -456,9 +464,8 @@ def global_cumsum(
     )
     offs = offsets_from_totals(totals, [f"__tot_{c}" for c in sum_cols], prefix="__o_")
     out = local.join(F.broadcast(offs), PID)
-    keep = list(df.columns) + ([PID] if keep_pid else [])
     out = out.select(
-        *keep,
+        *df.columns,
         *[
             (F.col(f"__loc_{c}") + F.col(f"__o___tot_{c}")).alias(f"cum_{c}")
             for c in sum_cols

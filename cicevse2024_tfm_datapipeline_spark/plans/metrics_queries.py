@@ -470,9 +470,10 @@ def _ovr_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="A11 OVR probability AUCs per class: one-vs-rest ROC-AUC "
     "(trapezoid) and average precision from per-class scores — the "
     "reference's per-class roc_auc_score / average_precision_score loop "
-    "(func_aux/func_test.py:120-171) as ONE grouped scan: "
-    "scan.grouped_cumsum range-partitions (class, threshold) so no class "
-    "is a single task; classes evaluate in parallel.",
+    "(func_aux/func_test.py:120-171) as ONE grouped scan: scores are "
+    "rounded to 3 decimals, so each class curve is bounded by the "
+    "threshold domain and one class-partitioned window is the scan; "
+    "classes evaluate in parallel.",
     tags=("A11", "A13"),
 )
 def a11_ovr_per_class(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -481,7 +482,7 @@ def a11_ovr_per_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     long_df = _ovr_long(spark, sf_dir)
     # scores are rounded to 3 decimals → each class curve is bounded by
     # the threshold domain, so the class-partitioned window is the plan
-    return ovr_auc_per_class(long_df, "c", "y", "score", bounded_curves=True).select(
+    return ovr_auc_per_class(long_df, "c", "y", "score").select(
         F.col("c").alias("class"),
         pround("roc_auc", 6).alias("roc_auc"),
         pround("average_precision", 6).alias("average_precision"),
@@ -539,7 +540,6 @@ def a11_mc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c",
         "y",
         "score",
-        bounded_curves=True,
         # same construction knowledge on the micro side: the grid kills
         # the quantile pre-pass (round 10; SCALE.md "A13 profile")
         micro_domain_bounds=_OVR_SCORE_GRID,

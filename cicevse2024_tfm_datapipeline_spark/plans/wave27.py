@@ -323,14 +323,6 @@ def _w_case_sql(n: str) -> str:
     return f"CASE {whens} ELSE {_MAX_W} END"
 
 
-def _w_case_col(n) -> F.Column:
-    """Spark: the identical integer CASE ladder over a count column."""
-    expr = F.lit(_MAX_W)
-    for thr, w in reversed(_W_LADDER):
-        expr = F.when(n <= F.lit(thr), F.lit(w)).otherwise(expr)
-    return expr
-
-
 def _ladder_width(n: int) -> int:
     """Driver-side twin of the ladder (same integer thresholds). Resolving
     w at PLAN TIME lets the Spark side build only the w projection

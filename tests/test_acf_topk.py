@@ -51,29 +51,6 @@ def test_acf_matches_numpy(spark):
     assert got[1] > 0.9
 
 
-def test_acf_partitioned_demeans_per_group(spark):
-    # two independent groups with very different offsets; each group must
-    # be demeaned by its OWN mean, so results equal the per-group NumPy
-    # reference ACF computed on each series alone
-    rng = np.random.default_rng(11)
-    series = {"a": rng.normal(size=50) + 100.0, "b": rng.normal(size=50) - 40.0}
-    pdf = pd.concat(
-        [pd.DataFrame({"g": g, "t": np.arange(50), "v": x}) for g, x in series.items()],
-        ignore_index=True,
-    )
-    df = spark.createDataFrame(pdf)
-    out = acf(df, "v", ["t"], [0, 1, 3], partition_cols=["g"]).toPandas()
-    assert len(out) == 6
-    for g, x in series.items():
-        want = _ref_acf(x, [0, 1, 3])
-        got = {
-            r["lag"]: r["acf_value"]
-            for _, r in out[out["g"] == g].iterrows()
-        }
-        for k, v in want.items():
-            assert abs(got[k] - v) < 1e-9, (g, k, got[k], v)
-
-
 def test_top_k_matches_pandas(spark):
     rng = np.random.default_rng(3)
     pdf = pd.DataFrame(

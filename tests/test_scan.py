@@ -5,6 +5,7 @@ the correctness contract that lets the engine ban unpartitioned windows.
 
 from __future__ import annotations
 
+import itertools
 import random
 
 import pytest
@@ -55,35 +56,6 @@ def test_global_row_number_matches_window(spark, seed, n, parts):
         for r in df.select(
             "k", F.row_number().over(W.orderBy(F.asc("k"))).alias("rn")
         ).collect()
-    }
-    assert got == want
-
-
-@pytest.mark.parametrize("seed,n,parts", [(6, 40, 5), (7, 150, 32)])
-def test_global_islands_matches_sequential_scan(spark, seed, n, parts):
-    """mark_episodes with NO partition cols (the scan path) must reproduce
-    the reference's sequential island numbering for random y/episode
-    sequences under any input partitioning."""
-    from cicevse2024_tfm_datapipeline_spark.operators.sessionize import mark_episodes
-
-    rng = random.Random(seed)
-    rows = [
-        (i, rng.randint(0, 1), rng.choice(["a", "b", "c"])) for i in range(n)
-    ]
-    # sequential reference scan
-    want: dict[int, int | None] = {}
-    island = 0
-    prev_y, prev_ep = None, None
-    for i, y, ep in rows:
-        if y == 1 and (prev_y is None or prev_y != 1 or prev_ep != ep):
-            island += 1
-        want[i] = island if y == 1 else None
-        prev_y, prev_ep = y, ep
-
-    df = spark.createDataFrame(rows, ["idx", "y", "ep"]).repartition(parts)
-    got = {
-        r["idx"]: r["episode"]
-        for r in mark_episodes(df, ["idx"], "y", episode_id_col="ep").collect()
     }
     assert got == want
 
@@ -203,36 +175,6 @@ def test_hierarchical_combine_multi_super_group(spark, super_size, monkeypatch):
     assert got_g == want_g
 
 
-@pytest.mark.parametrize("super_size", [1, 4])
-def test_sessionize_fill_multi_super_group(spark, super_size, monkeypatch):
-    """Same forcing for the sessionize first-row fill: the nearest earlier
-    non-empty bucket must be found across super-group boundaries (lag
-    within a super, triangle-argmax across supers)."""
-    import random as _random
-
-    from cicevse2024_tfm_datapipeline_spark.operators import scan, sessionize
-
-    # the fill now lives in scan.prev_nonempty_value (shared by sessionize)
-    monkeypatch.setattr(scan, "SUPER", super_size)
-
-    rng = _random.Random(23)
-    n = 220
-    rows = [(i, rng.randint(0, 1), rng.choice(["a", "b"])) for i in range(n)]
-    want: dict[int, int | None] = {}
-    island = 0
-    prev_y, prev_ep = None, None
-    for i, y, ep in rows:
-        if y == 1 and (prev_y is None or prev_y != 1 or prev_ep != ep):
-            island += 1
-        want[i] = island if y == 1 else None
-        prev_y, prev_ep = y, ep
-
-    df = spark.createDataFrame(rows, ["idx", "y", "ep"]).repartition(9)
-    out = sessionize.mark_episodes(df, ["idx"], "y", "ep", out_col="episode")
-    got = {r["idx"]: r["episode"] for r in out.collect()}
-    assert got == want
-
-
 @pytest.mark.parametrize("super_size", [1, 3, 1024])
 def test_prev_nonempty_value_with_pid_gaps(spark, super_size, monkeypatch):
     """prev_nonempty_value must return the nearest STRICTLY-earlier PID's
@@ -261,3 +203,40 @@ def test_prev_nonempty_value_single_bucket(spark):
     frame = spark.createDataFrame([(5, "only")], [scan.PID, "val"])
     got = scan.prev_nonempty_value(frame, "val", "prev").collect()
     assert len(got) == 1 and got[0]["prev"] is None
+
+
+_PROBE_IDS = itertools.count()
+
+
+def _construction_jobs(spark, build) -> int:
+    """Spark jobs that run while ``build()`` constructs a frame — counted
+    under a job group set before, and cleared after, the call; no action
+    is taken on the returned frame."""
+    sc = spark.sparkContext
+    # a fresh group per call: the tracker keeps every job a group ever ran
+    group = f"scan-construction-probe-{next(_PROBE_IDS)}"
+    sc.setJobGroup(group, "frame construction only")
+    try:
+        build()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("grid", [False, True], ids=["pinned", "uniform_grid"])
+def test_pin_runs_jobs_at_construction(spark, grid):
+    """``localCheckpoint(eager=False)`` is not lazy under AQE: building the
+    pinned scan already runs the range exchange's jobs, before any action.
+    A literal grid pins nothing, so the same scan builds with no job."""
+    from cicevse2024_tfm_datapipeline_spark.operators import scan
+
+    df = spark.createDataFrame(_random_rows(31, 200), ["k", "v", "g"]).repartition(3)
+    bounds = scan.uniform_grid(0, 600, 8) if grid else None
+    jobs = _construction_jobs(
+        spark, lambda: scan.global_cumsum(df, ["k"], ["v"], fixed_bounds=bounds)
+    )
+    if grid:
+        assert jobs == 0, "the grid path must build without running a job"
+    else:
+        assert jobs >= 1, "the pinned path's checkpoint ran no job at build"

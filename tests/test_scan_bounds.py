@@ -281,7 +281,7 @@ def test_a13_tier_is_lineage_free(spark):
     executor-storage copy are gone; multi-consumer reuse rides shuffle-
     stage reuse alone (the measured winner — no persist either).
     a11_multiclass_auc is exempt: its per_score frame keeps the blessed
-    TINY multi-consumer pin (bounded_curves rounds the score domain);
+    TINY multi-consumer pin (the rounded score domain bounds it);
     only its scans are bounds-mode."""
     from cicevse2024_tfm_datapipeline_spark.plans import load_all
 

@@ -149,6 +149,7 @@ if _HYP:
         documents (the range exchange would split it)."""
         from cicevse2024_tfm_datapipeline_spark.operators.scan import (
             PID,
+            bounds_bucketed,
             global_cumsum,
             uniform_grid,
         )
@@ -168,9 +169,11 @@ if _HYP:
             r["id"]: (r["cum_v"], r["tot_v"])
             for r in global_cumsum(df, **kw).collect()
         }
-        got = global_cumsum(df, fixed_bounds=grid, keep_pid=True, **kw).collect()
+        got = global_cumsum(df, fixed_bounds=grid, **kw).collect()
         assert pinned == {r["id"]: (r["cum_v"], r["tot_v"]) for r in got}
-        heavy_pids = {r[PID] for r in got if r["k"] == 2.0**heavy}
+        # the PIDs global_cumsum scans with: the same bucketing call
+        tagged = bounds_bucketed(df, kw["order_cols"], grid, descending).collect()
+        heavy_pids = {r[PID] for r in tagged if r["k"] == 2.0**heavy}
         assert len(heavy_pids) == 1, "a tie group must never span buckets"
         (pid,) = heavy_pids
-        assert sum(r[PID] == pid for r in got) >= n_heavy
+        assert sum(r[PID] == pid for r in tagged) >= n_heavy
