@@ -20,10 +20,19 @@ from pyspark.sql import functions as F
 
 
 def acf(
-    df: DataFrame, value_col: str, order_cols: Sequence[str], lags: Sequence[int]
+    df: DataFrame,
+    value_col: str,
+    order_cols: Sequence[str],
+    lags: Sequence[int],
+    fixed_bounds: Sequence[float] | None = None,
 ) -> DataFrame:
     """Rows (lag, acf_value) of the series ``value_col`` in the global
-    ``order_cols`` order, demeaned by its global mean. lag 0 → 1.0."""
+    ``order_cols`` order, demeaned by its global mean. lag 0 → 1.0.
+
+    ``fixed_bounds`` is the row-index scan's bucket grid on
+    ``order_cols[0]`` (``global_cumsum``): a grid, e.g. a
+    :func:`~cicevse2024_tfm_datapipeline_spark.operators.scan.footer_grid`,
+    builds with no Spark job; ``None`` takes the pinned range exchange."""
     from cicevse2024_tfm_datapipeline_spark.operators.scan import global_cumsum
 
     mean_df = df.agg(F.avg(value_col).alias("__mu"))
@@ -32,7 +41,8 @@ def acf(
         (F.col(value_col) - F.col("__mu")).alias("__x"),
     )
     idx = global_cumsum(
-        demeaned.withColumn("__one", F.lit(1)), order_cols, ["__one"]
+        demeaned.withColumn("__one", F.lit(1)), order_cols, ["__one"],
+        fixed_bounds=fixed_bounds,
     ).select(F.col("cum___one").alias("__idx"), "__x")
 
     e0 = idx.agg(F.sum(F.col("__x") * F.col("__x")).alias("__e0"))

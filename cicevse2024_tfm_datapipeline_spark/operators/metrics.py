@@ -82,31 +82,40 @@ def multiclass_point_metrics(df: DataFrame, y_true: str, y_pred: str) -> DataFra
     """A11 point metrics: accuracy, balanced accuracy, macro & weighted
     precision/recall/F1 (+F2, F0.5) from one per-class TP/FP/FN pass
     (func_aux/func_test.py:61-171). Zero-division → 0 (sklearn
-    ``zero_division=0``)."""
+    ``zero_division=0``); with no non-null ``y_true`` (total support 0)
+    ``accuracy`` and the ``*_weighted`` metrics are NULL.
+
+    The per-class counts are one aggregate: each row is exploded into its
+    ``y_true`` side (support, hit) and its ``y_pred`` side (prediction),
+    grouped by class label. No join, no distinct."""
     yt, yp = F.col(y_true), F.col(y_pred)
     # class universe = union of labels present in y_true and y_pred
     # (sklearn labels=None); zero-support classes contribute recall 0 to
-    # the macro averages but are excluded from balanced accuracy.
-    classes = df.select(yt.alias("c")).union(df.select(yp.alias("c"))).distinct()
+    # the macro averages but are excluded from balanced accuracy. A null
+    # label is a class with zero counts (the oracle's outer joins never
+    # match it), so a null side counts nothing.
+    zero = F.lit(0).cast("long")
+    sides = F.array(
+        F.struct(
+            yt.alias("c"),
+            yt.isNotNull().cast("long").alias("support"),
+            F.when(yp == yt, 1).otherwise(0).cast("long").alias("tp"),
+            zero.alias("pred_n"),
+        ),
+        F.struct(
+            yp.alias("c"),
+            zero.alias("support"),
+            zero.alias("tp"),
+            yp.isNotNull().cast("long").alias("pred_n"),
+        ),
+    )
     per_class = (
-        classes.join(
-            df.groupBy(yt.alias("c")).agg(
-                F.count(F.lit(1)).alias("support"),
-                F.sum((yp == yt).cast("long")).alias("tp"),
-            ),
-            "c",
-            "left",
-        )
-        .join(
-            df.groupBy(yp.alias("c")).agg(F.count(F.lit(1)).alias("pred_n")),
-            "c",
-            "left",
-        )
-        .select(
-            "c",
-            F.coalesce("support", F.lit(0)).alias("support"),
-            F.coalesce("tp", F.lit(0)).alias("tp"),
-            F.coalesce("pred_n", F.lit(0)).alias("pred_n"),
+        df.select(F.explode(sides).alias("s"))
+        .groupBy(F.col("s.c").alias("c"))
+        .agg(
+            F.sum("s.support").alias("support"),
+            F.sum("s.tp").alias("tp"),
+            F.sum("s.pred_n").alias("pred_n"),
         )
     )
 
@@ -132,17 +141,21 @@ def multiclass_point_metrics(df: DataFrame, y_true: str, y_pred: str) -> DataFra
         fbeta(0.5).alias("f05"),
     )
     total = F.sum("support")
+
+    def per_support(num):
+        return F.when(total > 0, num / total)
+
     return enriched.agg(
-        (F.sum("tp") / total).alias("accuracy"),
+        per_support(F.sum("tp")).alias("accuracy"),
         F.avg(F.when(F.col("support") > 0, F.col("rec"))).alias("balanced_accuracy"),
         F.avg("prec").alias("precision_macro"),
         F.avg("rec").alias("recall_macro"),
         F.avg("f1").alias("f1_macro"),
         F.avg("f2").alias("f2_macro"),
         F.avg("f05").alias("f0_5_macro"),
-        (F.sum(F.col("prec") * F.col("support")) / total).alias("precision_weighted"),
-        (F.sum(F.col("rec") * F.col("support")) / total).alias("recall_weighted"),
-        (F.sum(F.col("f1") * F.col("support")) / total).alias("f1_weighted"),
+        per_support(F.sum(F.col("prec") * F.col("support"))).alias("precision_weighted"),
+        per_support(F.sum(F.col("rec") * F.col("support"))).alias("recall_weighted"),
+        per_support(F.sum(F.col("f1") * F.col("support"))).alias("f1_weighted"),
     )
 
 

@@ -50,11 +50,18 @@ def chrono_split(
     train_frac: float = 0.7,
     val_frac: float = 0.15,
     split_col: str = "split",
+    index_col: str | None = None,
 ) -> DataFrame:
     """Tag every row with its chronological split (W1 + W2 fused).
 
     Returns the input plus a ``split`` column ∈ {train, val, test}. Rows
     with a null group key are dropped (reference dropna at :163).
+
+    With ``index_col``, also adds the row's 1-based position within its
+    (groups, split) in ``(time, tiebreak)`` order: the group row number
+    minus the rows of the earlier splits. A consumer that orders rows per
+    (split, groups), e.g. ``window_summary_stats(index_col=...)``, can
+    then reuse this split's sort instead of sorting again.
     """
     df = df.na.drop(subset=list(group_cols))
     order = [F.col(time_col).asc(), F.col(tiebreak_col).asc()]
@@ -72,4 +79,12 @@ def chrono_split(
         .when(rn <= n_train + n_val, F.lit("val"))
         .otherwise(F.lit("test"))
     )
-    return df.withColumn(split_col, split).drop("__split_rn", "__split_n")
+    df = df.withColumn(split_col, split)
+    if index_col is not None:
+        before = (
+            F.when(rn <= n_train, F.lit(0))
+            .when(rn <= n_train + n_val, n_train)
+            .otherwise(n_train + n_val)
+        )
+        df = df.withColumn(index_col, rn - before)
+    return df.drop("__split_rn", "__split_n")

@@ -14,7 +14,9 @@ Spark-first shape:
   big table, stays in whole-stage codegen.
 - W3 windows start from one ``row_number`` ``rn`` over
   ``partitionBy(group).orderBy(ts, tiebreak)``; window ``k`` holds the
-  rows with ``k·step < rn ≤ k·step + L``.
+  rows with ``k·step < rn ≤ k·step + L``. The stats path can take ``rn``
+  from a column instead (``chrono_split``'s position), which saves the
+  ``row_number``'s sort.
   - The array path (``sliding_windows``) runs trailing row frames
     ``rowsBetween(-(L-1), 0)`` and keeps the window ENDS (``rn >= L`` and
     ``(rn - L) % step == 0``); the label/episode at the frame end is the
@@ -41,6 +43,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 
 def fit_standardizer(train: DataFrame, features: Sequence[str]) -> dict[str, tuple[float, float]]:
@@ -158,6 +161,7 @@ def window_summary_stats(
     seq_len: int,
     step: int = 1,
     label_col: str | None = None,
+    index_col: str | None = None,
 ) -> DataFrame:
     """A6 over W3 framing: per-window mean/std/min/max per feature — the
     surrogate-model tabular featurization (func_aux/func_models.py:351-391;
@@ -175,14 +179,34 @@ def window_summary_stats(
     The two paths give the same rows: bit-identical when the aggregate does
     not spill, equal within floating-point rounding when it does (a spill
     merges partial mean/std buffers in another order).
+
+    ``index_col`` names a column that already holds each row's 1-based
+    position within its group in ``(time_col, tiebreak_col)`` order, e.g.
+    ``chrono_split(index_col=...)``'s; it is used in place of this
+    function's own ``row_number``, so the keyed path needs no sort. Its
+    stats equal the ``row_number`` form's bit for bit when rows reach the
+    aggregate in ``(time_col, tiebreak_col)`` order within each group, as
+    they do straight after ``chrono_split``'s window.
     """
-    if step >= seq_len:
-        return _window_stats_keyed(
-            df, group_cols, time_col, tiebreak_col, features, seq_len, step, label_col
-        )
-    return _window_stats_frames(
-        df, group_cols, time_col, tiebreak_col, features, seq_len, step, label_col
+    stats = _window_stats_keyed if step >= seq_len else _window_stats_frames
+    return stats(
+        df, group_cols, time_col, tiebreak_col, features, seq_len, step, label_col, index_col
     )
+
+
+def _with_position(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    time_col: str,
+    tiebreak_col: str,
+    index_col: str | None,
+) -> tuple[DataFrame, WindowSpec]:
+    """``df`` plus ``__rn``, each row's 1-based position in its group
+    (``index_col`` when given, else a ``row_number``), and the group's
+    ``(time_col, tiebreak_col)`` window."""
+    order_win = W.partitionBy(*group_cols).orderBy(F.col(time_col).asc(), F.col(tiebreak_col).asc())
+    rn = F.row_number().over(order_win) if index_col is None else F.col(index_col)
+    return df.withColumn("__rn", rn), order_win
 
 
 def _window_stats_keyed(
@@ -194,17 +218,17 @@ def _window_stats_keyed(
     seq_len: int,
     step: int,
     label_col: str | None,
+    index_col: str | None = None,
 ) -> DataFrame:
     """For ``step >= seq_len`` only. Window ``k`` holds the rows with
     ``k·step < rn ≤ k·step + seq_len``, so a row is in window
     ``(rn - 1) div step`` unless it sits in the gap between windows; then
     ``groupBy(groups, window_id)`` computes the stats and keeps full
     windows only. The aggregate is clustered on the group keys the
-    ``row_number`` window already shuffled by, so it adds no exchange."""
-    order_win = W.partitionBy(*group_cols).orderBy(F.col(time_col).asc(), F.col(tiebreak_col).asc())
+    position's window already shuffled by, so it adds no exchange."""
+    df, _ = _with_position(df, group_cols, time_col, tiebreak_col, index_col)
     out = (
-        df.withColumn("__rn", F.row_number().over(order_win))
-        .filter(F.expr(f"(__rn - 1) % {step} < {seq_len}"))
+        df.filter(F.expr(f"(__rn - 1) % {step} < {seq_len}"))
         .withColumn("window_id", F.expr(f"(__rn - 1) div {step}"))
     )
     aggs: list[Column] = []
@@ -235,14 +259,13 @@ def _window_stats_frames(
     seq_len: int,
     step: int,
     label_col: str | None,
+    index_col: str | None = None,
 ) -> DataFrame:
     """Trailing ``rowsBetween(-(seq_len-1), 0)`` aggregates on every row,
     kept at the window ends (``rn >= seq_len``, ``(rn - seq_len) % step
     == 0``); the label is the end row's own."""
-    order_win = W.partitionBy(*group_cols).orderBy(F.col(time_col).asc(), F.col(tiebreak_col).asc())
+    out, order_win = _with_position(df, group_cols, time_col, tiebreak_col, index_col)
     frame = order_win.rowsBetween(-(seq_len - 1), 0)
-
-    out = df.withColumn("__rn", F.row_number().over(order_win))
     cols: list[Column] = [F.col(c) for c in group_cols]
     cols.append((((F.col("__rn") - F.lit(seq_len)) / F.lit(step)).cast("long")).alias("window_id"))
     for f in features:

@@ -5,8 +5,17 @@ points (SURVEY §3) — a user of the reference runs the same lifecycle here:
   train-only scaling → sliding windows → (train at the ML edge) →
   metric battery → artifacts
 
-Steps 1-7 are ONE lazy DataFrame DAG materialized to parquet once
-(SURVEY §3.1 'Spark shape'); metrics are aggregation queries over it.
+The power lifecycle is not one DAG: it runs these Spark actions in turn
+(SURVEY §3.1 'Spark shape'):
+
+1. the standardizer fit, one aggregate over the train split;
+2. the window count per split, which also fills the windows cache;
+3. the metric battery over the cached windows (one aggregate for the
+   multiclass tasks; the binary battery runs several);
+4. the windows parquet write (with ``output_dir``).
+
+The split tags each row with its position within (attack, state, split),
+so the windows reuse the split's sort: the windows plan has one Sort.
 """
 
 from __future__ import annotations
@@ -71,12 +80,11 @@ def prepare_labels_for_task(df: DataFrame, task: str, attack_col: str = "attack"
     raise ValueError("task must be 'binary', 'scenario' or 'multiattack'")
 
 
-def run_power_pipeline(spark: SparkSession, events: DataFrame, cfg: PipelineConfig) -> dict:
-    """The flagship lifecycle (SURVEY §3.1) on a power-shaped frame with
-    columns (ts, event_id, attack, state, value). Returns the metrics
-    artifact dict; writes windows parquet + metrics.json/config.json when
-    cfg.output_dir is set (S5/S6 artifact contract)."""
-    t0 = time.perf_counter()
+def power_windows(events: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, list[str]]:
+    """The lifecycle of :func:`run_power_pipeline` up to the windows
+    (label derive → clean → chrono split → train-only scaling → window
+    stats): the lazy per-window feature frame and the feature names. Runs
+    one Spark action, the standardizer fit on the train split."""
     df = events.withColumn("state_bin", charging_flag_expr(cfg.state_col))
     df, target_col = prepare_labels_for_task(df, cfg.task, cfg.attack_col)
     # P5 + F11: clean and encode
@@ -84,10 +92,11 @@ def run_power_pipeline(spark: SparkSession, events: DataFrame, cfg: PipelineConf
     df = df.na.drop(subset=feats + [target_col])
     df = label_encode(df, target_col, "y")
 
-    # W1: per-(attack,state) chronological split
+    # W1: per-(attack,state) chronological split; the position within
+    # (attack, state, split) lets the windows reuse the split's sort
     tagged = chrono_split(
         df, [cfg.attack_col, cfg.state_col], cfg.time_col, cfg.tiebreak_col,
-        cfg.train_frac, cfg.val_frac,
+        cfg.train_frac, cfg.val_frac, index_col="__split_pos",
     )
 
     # W5: train-only standardization of numeric features
@@ -104,70 +113,87 @@ def run_power_pipeline(spark: SparkSession, events: DataFrame, cfg: PipelineConf
         cfg.seq_len,
         cfg.step,
         label_col="y",
+        index_col="__split_pos",
     )
+    return windows, feats
+
+
+def run_power_pipeline(spark: SparkSession, events: DataFrame, cfg: PipelineConfig) -> dict:
+    """The flagship lifecycle (SURVEY §3.1) on a power-shaped frame with
+    columns (ts, event_id, attack, state, value). Returns the metrics
+    artifact dict; writes windows parquet + metrics.json/config.json when
+    cfg.output_dir is set (S5/S6 artifact contract). The windows are
+    cached for the run and released on every exit path."""
+    t0 = time.perf_counter()
+    windows, feats = power_windows(events, cfg)
     windows = windows.persist()
-    n_windows = {r["split"]: r["n"] for r in windows.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()}
+    try:
+        # sorted: the collect returns the splits in the aggregate's
+        # arrival order, which follows the windows' partitioning
+        counts = windows.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
+        n_windows = dict(sorted((r["split"], r["n"]) for r in counts))
 
-    # stand-in detector at the window level (the ML edge plugs in here —
-    # swap the score expression for ml.models.predict_udf output)
-    mean_col = f"{cfg.num_features[0]}_mean"
-    score = F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col(mean_col)))
-    test = windows.filter(F.col("split") == "test").withColumn(
-        "y_pred", (F.col(mean_col) > 0).cast("int")
-    )
-    hop = cfg.step * cfg.sample_period_seconds
-
-    if cfg.task == "binary":
-        from cicevse2024_tfm_datapipeline_spark.evaluation import (
-            evaluate_binary_operational,
+        # stand-in detector at the window level (the ML edge plugs in here —
+        # swap the score expression for ml.models.predict_udf output)
+        mean_col = f"{cfg.num_features[0]}_mean"
+        score = F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col(mean_col)))
+        test = windows.filter(F.col("split") == "test").withColumn(
+            "y_pred", (F.col(mean_col) > 0).cast("int")
         )
+        hop = cfg.step * cfg.sample_period_seconds
 
-        # label code for 'attack' is 0 (alphabetical) → y_true = 1 - y
-        def _binify(frame: DataFrame) -> DataFrame:
-            return frame.withColumn(
-                "y_true", (F.col("window_label") == 0).cast("int")
-            ).withColumn("score", score)
-
-        val_b = _binify(windows.filter(F.col("split") == "val"))
-        test_b = _binify(windows.filter(F.col("split") == "test"))
-        metrics = {
-            "binary": evaluate_binary_operational(
-                val_b,
-                test_b,
-                "y_true",
-                "score",
-                fpr_target=cfg.extra.get("fpr_target", 1e-3),
-                window_hop_seconds=hop,
-                order_cols=(cfg.attack_col, cfg.state_col, "window_id"),
-                collect_curves=False,
+        if cfg.task == "binary":
+            from cicevse2024_tfm_datapipeline_spark.evaluation import (
+                evaluate_binary_operational,
             )
-        }
-    else:
-        mc = multiclass_point_metrics(
-            test.withColumn("yp_label", F.col("y_pred")), "window_label", "yp_label"
-        ).collect()[0].asDict()
-        metrics = {"global": mc}
 
-    artifact = {
-        "config": {
-            "task": cfg.task,
-            "seq_len": cfg.seq_len,
-            "step": cfg.step,
-            "train_frac": cfg.train_frac,
-            "val_frac": cfg.val_frac,
-            "features": feats,
-        },
-        "n_windows": n_windows,
-        "metrics": metrics,
-        "training_time_seconds": time.perf_counter() - t0,
-    }
-    if cfg.output_dir:
-        os.makedirs(cfg.output_dir, exist_ok=True)
-        windows.write.mode("overwrite").parquet(os.path.join(cfg.output_dir, "windows.parquet"))
-        _dump_json(os.path.join(cfg.output_dir, "metrics.json"), {"metrics": metrics, "n_windows": n_windows})
-        _dump_json(os.path.join(cfg.output_dir, "config.json"), artifact["config"])
-    windows.unpersist()
-    return artifact
+            # label code for 'attack' is 0 (alphabetical) → y_true = 1 - y
+            def _binify(frame: DataFrame) -> DataFrame:
+                return frame.withColumn(
+                    "y_true", (F.col("window_label") == 0).cast("int")
+                ).withColumn("score", score)
+
+            val_b = _binify(windows.filter(F.col("split") == "val"))
+            test_b = _binify(windows.filter(F.col("split") == "test"))
+            metrics = {
+                "binary": evaluate_binary_operational(
+                    val_b,
+                    test_b,
+                    "y_true",
+                    "score",
+                    fpr_target=cfg.extra.get("fpr_target", 1e-3),
+                    window_hop_seconds=hop,
+                    order_cols=(cfg.attack_col, cfg.state_col, "window_id"),
+                    collect_curves=False,
+                )
+            }
+        else:
+            mc = multiclass_point_metrics(
+                test.withColumn("yp_label", F.col("y_pred")), "window_label", "yp_label"
+            ).collect()[0].asDict()
+            metrics = {"global": mc}
+
+        artifact = {
+            "config": {
+                "task": cfg.task,
+                "seq_len": cfg.seq_len,
+                "step": cfg.step,
+                "train_frac": cfg.train_frac,
+                "val_frac": cfg.val_frac,
+                "features": feats,
+            },
+            "n_windows": n_windows,
+            "metrics": metrics,
+            "training_time_seconds": time.perf_counter() - t0,
+        }
+        if cfg.output_dir:
+            os.makedirs(cfg.output_dir, exist_ok=True)
+            windows.write.mode("overwrite").parquet(os.path.join(cfg.output_dir, "windows.parquet"))
+            _dump_json(os.path.join(cfg.output_dir, "metrics.json"), {"metrics": metrics, "n_windows": n_windows})
+            _dump_json(os.path.join(cfg.output_dir, "config.json"), artifact["config"])
+        return artifact
+    finally:
+        windows.unpersist()
 
 
 def run_host_pipeline(

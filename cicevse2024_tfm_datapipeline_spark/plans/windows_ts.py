@@ -382,7 +382,13 @@ def w6_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w7_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
-    out = acf(ev, "value", ["ts", "event_id"], lags=[0, 1, 2, 5, 10])
+    # the events footer grid on ts: the row index is built on the
+    # lineage-free bounds scan, so building the query runs no Spark job
+    # (without statistics the grid is None and the scan pins)
+    out = acf(
+        ev, "value", ["ts", "event_id"], lags=[0, 1, 2, 5, 10],
+        fixed_bounds=footer_grid(spark, sf_dir, "events", "ts"),
+    )
     return out.select(F.col("lag"), pround("acf_value", 6).alias("acf_value"))
 
 

@@ -33,3 +33,21 @@ def duck():
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
     return con
+
+
+def construction_jobs(spark, build) -> int:
+    """Spark jobs that run while ``build()`` constructs a frame — counted
+    under a job group set before, and cleared after, the call; no action
+    is taken on the returned frame."""
+    import uuid
+
+    sc = spark.sparkContext
+    # a fresh group per call: the tracker keeps every job a group ever ran
+    group = f"construction-probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "frame construction only")
+    try:
+        build()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

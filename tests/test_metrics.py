@@ -64,6 +64,47 @@ def test_multiclass_accuracy_and_macro(spark):
     assert abs(r["balanced_accuracy"] - 0.5) < 1e-12
 
 
+_A11_FRAMES = {
+    "null_y_true": [("a", "a"), (None, "b"), ("b", "b"), ("a", "b")],
+    "null_y_pred": [("a", None), ("a", "a"), ("b", "a"), ("c", None)],
+    "pred_only_class": [("a", "c"), ("b", "b"), ("a", "a"), ("b", "d")],
+    "all_null_y_true": [(None, "a")],
+    "all_null_both": [(None, "a"), (None, None), (None, "b")],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_A11_FRAMES))
+def test_multiclass_point_metrics_matches_a11_oracle(spark, tmp_path, case):
+    """The battery equals the a11 oracle's per-class SQL (its outer joins,
+    a null label as a zero-count class, NULL at zero total support) on
+    frames with null labels, a class seen only in ``y_pred`` and no
+    non-null ``y_true`` at all; the plan has no join."""
+    import pandas as pd
+
+    from cicevse2024_tfm_datapipeline_spark.operators.metrics import multiclass_point_metrics
+    from cicevse2024_tfm_datapipeline_spark.plans import load_all
+    from cicevse2024_tfm_datapipeline_spark.plans.common import pround
+    from tools.selfcheck import compare, duck_conn
+
+    rows = _A11_FRAMES[case]
+    oracle = load_all()["a11_multiclass_point_metrics"].oracle
+    per_class_sql = "WITH " + oracle[oracle.index("classes AS ("):]
+    con = duck_conn(str(tmp_path))
+    con.register("preds", pd.DataFrame(rows, columns=["yt", "yp"]))
+    want = con.execute(per_class_sql).df()
+
+    df = spark.createDataFrame(rows, "yt string, yp string")
+    m = multiclass_point_metrics(df, "yt", "yp")
+    got = m.select(*[pround(F.col(c), 6).alias(c) for c in m.columns])
+    status, detail = compare(got.toPandas(), want)
+    assert status == "EXACT", (case, detail, got.collect(), want)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan
+    if case.startswith("all_null_y"):
+        r = got.collect()[0]
+        assert r["accuracy"] is None and r["f1_weighted"] is None
+
+
 def test_clopper_pearson_known_values():
     from cicevse2024_tfm_datapipeline_spark.operators.metrics import clopper_pearson_ci
 

@@ -1,4 +1,4 @@
-"""Parquet writers may omit min/max statistics. The eight fixed-grid
+"""Parquet writers may omit min/max statistics. The nine fixed-grid
 queries size their bucket grids from footer statistics; without them
 they must fall back to the grid-less path — the pinned range exchange —
 and return the same rows, not raise."""
@@ -8,6 +8,8 @@ from __future__ import annotations
 import os
 
 import pytest
+
+from tests.conftest import construction_jobs
 
 SF = "/root/testdata/sf0.001"
 
@@ -20,6 +22,7 @@ FIXED_GRID_QUERIES = (
     "a_psi_drift",
     "w6_sessionize_ttd",
     "r5_hash_permutation",
+    "w7_acf_fixed_lags",
 )
 
 
@@ -60,3 +63,14 @@ def test_fixed_grid_query_without_statistics(spark, no_stats_sf, name):
     q = load_all()[name]
     want = sorted(q.spark(spark, SF).collect())
     assert sorted(q.spark(spark, no_stats_sf).collect()) == want
+
+
+def test_w7_acf_builds_without_jobs_on_the_footer_grid(spark, no_stats_sf):
+    """With footer statistics ``w7_acf_fixed_lags`` builds its row index
+    on the grid and runs no Spark job before an action; without them the
+    grid is None and the pinned range exchange runs at build."""
+    from cicevse2024_tfm_datapipeline_spark.plans import load_all
+
+    q = load_all()["w7_acf_fixed_lags"]
+    assert construction_jobs(spark, lambda: q.spark(spark, SF)) == 0
+    assert construction_jobs(spark, lambda: q.spark(spark, no_stats_sf)) >= 1

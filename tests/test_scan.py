@@ -5,12 +5,13 @@ the correctness contract that lets the engine ban unpartitioned windows.
 
 from __future__ import annotations
 
-import itertools
 import random
 
 import pytest
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+from tests.conftest import construction_jobs
 
 
 def _random_rows(seed: int, n: int):
@@ -205,25 +206,6 @@ def test_prev_nonempty_value_single_bucket(spark):
     assert len(got) == 1 and got[0]["prev"] is None
 
 
-_PROBE_IDS = itertools.count()
-
-
-def _construction_jobs(spark, build) -> int:
-    """Spark jobs that run while ``build()`` constructs a frame — counted
-    under a job group set before, and cleared after, the call; no action
-    is taken on the returned frame."""
-    sc = spark.sparkContext
-    # a fresh group per call: the tracker keeps every job a group ever ran
-    group = f"scan-construction-probe-{next(_PROBE_IDS)}"
-    sc.setJobGroup(group, "frame construction only")
-    try:
-        build()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("grid", [False, True], ids=["pinned", "uniform_grid"])
 def test_pin_runs_jobs_at_construction(spark, grid):
     """``localCheckpoint(eager=False)`` is not lazy under AQE: building the
@@ -233,7 +215,7 @@ def test_pin_runs_jobs_at_construction(spark, grid):
 
     df = spark.createDataFrame(_random_rows(31, 200), ["k", "v", "g"]).repartition(3)
     bounds = scan.uniform_grid(0, 600, 8) if grid else None
-    jobs = _construction_jobs(
+    jobs = construction_jobs(
         spark, lambda: scan.global_cumsum(df, ["k"], ["v"], fixed_bounds=bounds)
     )
     if grid:

@@ -71,3 +71,59 @@ def test_split_plans_each_window_expression_once(spark):
     plan = plan.split("== Initial Plan ==")[0]  # AQE's final plan only
     assert len(re.findall(r"row_number\(\) windowspecdefinition", plan)) == 1, plan
     assert len(re.findall(r"count\(1\) windowspecdefinition", plan)) == 1, plan
+
+
+def _position_input(spark):
+    """Groups of 1 to 3 rows (the small-group guard) and of 7 and 20,
+    timestamps tied in pairs and a null timestamp; the ``event_id``
+    tiebreak runs against insertion order."""
+    base = datetime.datetime(2024, 1, 1)
+    rows = []
+    for g, n in (("a", 1), ("b", 2), ("c", 3), ("d", 7), ("e", 20)):
+        for i in range(n):
+            ts = None if i == 1 else base + datetime.timedelta(seconds=i // 2)
+            rows.append((g, "s", ts, 100 - i))
+    return spark.createDataFrame(rows, "attack string, state string, ts timestamp, event_id long")
+
+
+def test_split_position_is_row_number_within_split(spark):
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from cicevse2024_tfm_datapipeline_spark.operators.split import chrono_split
+
+    out = chrono_split(
+        _position_input(spark), ["attack", "state"], "ts", "event_id", index_col="pos"
+    )
+    assert out.columns == _position_input(spark).columns + ["split", "pos"]
+    want = out.withColumn(
+        "want",
+        F.row_number().over(
+            Window.partitionBy("attack", "state", "split").orderBy("ts", "event_id")
+        ),
+    )
+    rows = want.collect()
+    assert len(rows) == 33
+    assert [r for r in rows if r["pos"] != r["want"]] == []
+    # every offset branch is taken: positions restart in val and test
+    assert {(r["split"], r["pos"]) for r in rows if r["attack"] == "e"} >= {
+        ("train", 1), ("val", 1), ("test", 1)
+    }
+
+
+def test_split_without_position_plan_unchanged(spark):
+    """The position is pruned when unused, and without ``index_col`` the
+    output is the split alone: both plans match once ids are masked."""
+    from cicevse2024_tfm_datapipeline_spark.operators.split import chrono_split
+    from tools.dump_plans import mask_ids
+
+    df = _position_input(spark)
+    plain = chrono_split(df, ["attack", "state"], "ts", "event_id")
+    pruned = chrono_split(df, ["attack", "state"], "ts", "event_id", index_col="pos").drop("pos")
+    assert plain.columns == df.columns + ["split"]
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+
+    def masked(frame):
+        return mask_ids(frame._jdf.queryExecution().explainString(mode))
+
+    assert masked(plain) == masked(pruned)

@@ -147,6 +147,23 @@ def test_window_summary_stats_matches_python(spark, seq_len, step):
         assert r["window_label"] == str((start + seq_len - 1) % 3)
 
 
+@pytest.mark.parametrize("seq_len,step", [(5, 5), (5, 7), (15, 15), (15, 22), (5, 2)])
+def test_window_stats_split_position_matches_row_number(spark, seq_len, step):
+    """Windows over ``chrono_split``'s position are the windows over the
+    function's own ``row_number``, bit for bit, on both paths."""
+    from cicevse2024_tfm_datapipeline_spark.operators.split import chrono_split
+    from cicevse2024_tfm_datapipeline_spark.operators.windows import window_summary_stats
+
+    tagged = chrono_split(_stats_input(spark), ["g", "h"], "ts", "rid", index_col="pos")
+    args = (["split", "g", "h"], "ts", "rid", ["x", "y"], seq_len, step, "lab")
+    own = window_summary_stats(tagged, *args)
+    reused = window_summary_stats(tagged, *args, index_col="pos")
+    assert reused.dtypes == own.dtypes
+    assert reused.exceptAll(own).count() == 0
+    assert own.exceptAll(reused).count() == 0
+    assert own.count() > 0
+
+
 def _final_plan(df) -> str:
     """The executed physical plan after a run (AQE's final plan only)."""
     df.collect()

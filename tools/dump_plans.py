@@ -4,7 +4,8 @@ The optimization-round evidence artifact: before/after physical plans for
 every touched query (the judge checks plan claims against these files).
 
 Expression ids (``#123``), RDD ids (``[12]`` after an RDD name, ``RDD
-123``) and call sites, and exchange plan ids (``plan_id=123``) are masked,
+123``) and call sites, exchange plan ids (``plan_id=123``) and lambda
+variable numbers (``lambda x_12``) are masked,
 so two dumps of the same tree — or of two trees whose plans agree — diff
 cleanly.
 
@@ -32,6 +33,9 @@ _MASKS = (
     # the RDD's creation call site varies with JIT state
     (re.compile(r"(RDD\[N\] at \w+) at [^,\s]+"), r"\1 at <site>"),
     (re.compile(r"\bRDD \d+\b"), "RDD N"),
+    # lambda variables are numbered by a process-wide counter, so one
+    # more or fewer lambda in an earlier query renames them in later ones
+    (re.compile(r"\b(lambda \w+?)_\d+#"), r"\1_N#"),
 )
 
 
