@@ -8,13 +8,16 @@ a small-group guard when ``n_train + n_val >= n``:
     n_train = max(1, n_train)
     n_val   = max(0, min(n - n_train - 1, n_val))
 
-Spark-first shape: one window pass — ``row_number`` + ``count`` over
-``partitionBy(groups).orderBy(time, tiebreak)``, each computed once as a
-column, and a CASE on floor-of-count arithmetic over those columns. No
-iteration over groups, no concat: the split of ALL groups is a single
-shuffle by the group key, which scales linearly with data and is
-skew-tolerant under AQE. ``percent_rank`` would NOT reproduce the ``int()``
-truncation on small groups, so we use explicit floor arithmetic.
+Spark-first shape: one window pass — ``row_number`` and a whole-group
+``count`` over ``partitionBy(groups).orderBy(time, tiebreak)`` (one
+``Window`` node, so one sorted group buffer per task), each computed once
+as a column, and a CASE on floor-of-count arithmetic over those columns.
+No iteration over groups, no concat: the split of ALL groups is a single
+range exchange on the group key (``windows._cluster_groups``), which
+scales linearly with data. It is not skew-tolerant: a group is never
+split across tasks, and AQE does not split window partitions, so the
+largest group bounds the stage. ``percent_rank`` would NOT reproduce the
+``int()`` truncation on small groups, so we use explicit floor arithmetic.
 
 The tiebreak column matters: pandas ``sort_values`` is stable on file
 order, so equal timestamps keep input order. A distributed engine must pin
@@ -28,6 +31,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+from cicevse2024_tfm_datapipeline_spark.operators.windows import _cluster_groups
 
 
 def split_size_exprs(n: Column, train_frac: float, val_frac: float) -> tuple[Column, Column]:
@@ -63,14 +68,16 @@ def chrono_split(
     (split, groups), e.g. ``window_summary_stats(index_col=...)``, can
     then reuse this split's sort instead of sorting again.
     """
-    df = df.na.drop(subset=list(group_cols))
+    df = _cluster_groups(df.na.drop(subset=list(group_cols)), group_cols)
     order = [F.col(time_col).asc(), F.col(tiebreak_col).asc()]
     win = W.partitionBy(*group_cols).orderBy(*order)
-    cnt = W.partitionBy(*group_cols)
-    # rn and n as columns: the CASE below names each several times, and
-    # inlined window expressions would each be planned again
+    # the count over the same ordered spec with a whole-group frame shares
+    # the row number's Window node; rn and n as columns: the CASE below
+    # names each several times, and inlined window expressions would each
+    # be planned again
+    whole = win.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
     df = df.withColumn("__split_rn", F.row_number().over(win)).withColumn(
-        "__split_n", F.count(F.lit(1)).over(cnt)
+        "__split_n", F.count(F.lit(1)).over(whole)
     )
     rn, n = F.col("__split_rn"), F.col("__split_n")
     n_train, n_val = split_size_exprs(n, train_frac, val_frac)

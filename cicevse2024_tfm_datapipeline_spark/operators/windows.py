@@ -31,9 +31,15 @@ Scale note (SURVEY §7.4 risk 2): the reference windows one global series;
 a single unpartitioned ``Window.orderBy`` would serialize 100 TB through
 one task. The engine therefore always windows within group keys
 (attack/state/split — matching reference semantics, which builds windows
-per split anyway), so the shuffle is by group and parallel. For very long
-single groups, ``windows_via_pandas`` does the same per contiguous chunk
-with Arrow batches.
+per split anyway). A group is never split across tasks, so the width of a
+window stage is at most the number of groups, and only if the groups are
+spread evenly: a hash exchange on a handful of keys can put nearly all
+rows in one partition, and AQE then merges the small rest into the same
+task (it splits skewed partitions for joins only, never for a window or
+an aggregate). :func:`_cluster_groups` range-partitions the groups into
+the session's shuffle partition count instead (SCALE.md "W1/W3 group
+clustering"). For very long single groups, ``windows_via_pandas`` does
+the same per contiguous chunk with Arrow batches.
 """
 
 from __future__ import annotations
@@ -44,6 +50,18 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.window import WindowSpec
+
+
+def _cluster_groups(df: DataFrame, group_cols: Sequence[str]) -> DataFrame:
+    """``df`` range-partitioned on the group keys into the session's
+    ``spark.sql.shuffle.partitions`` (read, never set): each group lands
+    whole in one partition, and the groups are spread by their sampled
+    row weight rather than by hash. The explicit count keeps AQE from
+    coalescing the partitions; a range partitioner makes at most one
+    more of them than there are distinct keys. A per-group ``Window``,
+    aggregate or ``applyInPandas`` after it needs no exchange of its own."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartitionByRange(n, *group_cols)
 
 
 def fit_standardizer(train: DataFrame, features: Sequence[str]) -> dict[str, tuple[float, float]]:
@@ -135,7 +153,7 @@ def sliding_windows(
     order_win = W.partitionBy(*group_cols).orderBy(F.col(time_col).asc(), F.col(tiebreak_col).asc())
     frame = order_win.rowsBetween(-(seq_len - 1), 0)
 
-    out = df.withColumn("__rn", F.row_number().over(order_win))
+    out = _cluster_groups(df, group_cols).withColumn("__rn", F.row_number().over(order_win))
     cols: list[Column] = [F.col(c) for c in group_cols]
     cols.append((((F.col("__rn") - F.lit(seq_len)) / F.lit(step)).cast("long")).alias("window_id"))
     if collect_series:
@@ -202,10 +220,14 @@ def _with_position(
     index_col: str | None,
 ) -> tuple[DataFrame, WindowSpec]:
     """``df`` plus ``__rn``, each row's 1-based position in its group
-    (``index_col`` when given, else a ``row_number``), and the group's
+    (``index_col`` when given, else a ``row_number`` over the groups
+    clustered by :func:`_cluster_groups`), and the group's
     ``(time_col, tiebreak_col)`` window."""
     order_win = W.partitionBy(*group_cols).orderBy(F.col(time_col).asc(), F.col(tiebreak_col).asc())
-    rn = F.row_number().over(order_win) if index_col is None else F.col(index_col)
+    if index_col is None:
+        df, rn = _cluster_groups(df, group_cols), F.row_number().over(order_win)
+    else:
+        rn = F.col(index_col)
     return df.withColumn("__rn", rn), order_win
 
 
@@ -344,7 +366,8 @@ def windows_via_pandas(
             rows["window_label"] = [lab[s + seq_len - 1] for s in starts]
         return pd.DataFrame(rows)
 
-    return df.groupBy(*group_cols).applyInPandas(per_group, schema=schema)
+    clustered = _cluster_groups(df, group_cols)
+    return clustered.groupBy(*group_cols).applyInPandas(per_group, schema=schema)
 
 
 def ewma_truncated(

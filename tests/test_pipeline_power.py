@@ -19,7 +19,10 @@ def _cfg(**kw):
 def test_power_windows_sort_once(spark):
     """The windows aggregate at (split, attack, state, window_id) over the
     split's position, so the executed plan keeps the split's one Sort
-    (the windows' own ``row_number`` added a second)."""
+    (the windows' own ``row_number`` added a second) and its one Window
+    node (row number and group count share it). The groups reach it
+    through a range exchange into the session's shuffle partition count,
+    which AQE does not coalesce, not through a hash exchange."""
     from cicevse2024_tfm_datapipeline_spark.pipelines import power_windows
     from cicevse2024_tfm_datapipeline_spark.plans.common import power_view
 
@@ -28,6 +31,14 @@ def test_power_windows_sort_once(spark):
     plan = windows._jdf.queryExecution().executedPlan().toString()
     plan = plan.split("== Initial Plan ==")[0]  # AQE's final plan only
     assert len(re.findall(r"\bSort \[", plan)) == 1, plan
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    ranged = re.findall(
+        r"Exchange rangepartitioning\(attack#\d+ ASC NULLS FIRST, "
+        r"state#\d+ ASC NULLS FIRST, (\d+)\), REPARTITION_BY_NUM",
+        plan,
+    )
+    assert ranged == [spark.conf.get("spark.sql.shuffle.partitions")], plan
+    assert not re.search(r"hashpartitioning\(attack#\d+, state#\d+", plan), plan
 
 
 def test_power_pipeline_failure_releases_cached_windows(spark, tmp_path):

@@ -127,3 +127,54 @@ def test_split_without_position_plan_unchanged(spark):
         return mask_ids(frame._jdf.queryExecution().explainString(mode))
 
     assert masked(plain) == masked(pruned)
+
+
+def test_split_spreads_whole_groups_over_partitions(spark):
+    """The split's window runs on the groups range-clustered into the
+    session's shuffle partitions: each (attack, state) sits whole in one
+    partition, and more than one partition holds rows (a hash exchange on
+    ten keys let AQE fold the stage into one task)."""
+    from pyspark.sql import functions as F
+
+    from cicevse2024_tfm_datapipeline_spark.operators.split import chrono_split
+    from cicevse2024_tfm_datapipeline_spark.plans.common import power_view
+    from tests.conftest import SF_SMOKE
+
+    tagged = chrono_split(power_view(spark, SF_SMOKE), ["attack", "state"], "ts", "event_id")
+    rows = (
+        tagged.withColumn("pid", F.spark_partition_id())
+        .groupBy("attack", "state")
+        .agg(F.collect_set("pid").alias("pids"))
+        .collect()
+    )
+    assert len(rows) == 10
+    assert [r for r in rows if len(r["pids"]) != 1] == []
+    assert len({r["pids"][0] for r in rows}) >= 2, rows
+
+
+@pytest.mark.parametrize("parts", [1, 3, 7])
+def test_split_does_not_depend_on_partition_count(spark, parts):
+    """``(split, position)`` per row is the same at any shuffle partition
+    count: on the power view and on the tied / null-timestamp groups."""
+    from cicevse2024_tfm_datapipeline_spark.operators.split import chrono_split
+    from cicevse2024_tfm_datapipeline_spark.plans.common import power_view
+    from tests.conftest import SF_SMOKE
+
+    def tagged_rows():
+        out = []
+        for df in (power_view(spark, SF_SMOKE), _position_input(spark)):
+            split = chrono_split(df, ["attack", "state"], "ts", "event_id", index_col="__split_pos")
+            out.append(sorted(
+                (r["attack"], r["event_id"], r["split"], r["__split_pos"]) for r in split.collect()
+            ))
+        return out
+
+    want = tagged_rows()
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(parts))
+    try:
+        got = tagged_rows()
+    finally:
+        spark.conf.set(key, saved)
+    assert got == want

@@ -52,6 +52,37 @@ def test_windows_via_pandas_matches_frame_variant(spark):
     assert pa == pb
 
 
+@pytest.mark.parametrize("parts", [1, 3, 7])
+def test_windows_via_pandas_matches_frame_variant_per_partition_count(spark, parts):
+    """Both array paths cluster the groups by range into the shuffle
+    partition count; their windows agree, and do not depend on it, over
+    several groups, a null group key and tied timestamps."""
+    from cicevse2024_tfm_datapipeline_spark.operators.windows import (
+        sliding_windows,
+        windows_via_pandas,
+    )
+
+    def windows(fn):
+        df = _stats_input(spark).withColumn("v", F.col("y").cast("double"))
+        out = fn(df, ["g", "h"], "ts", "rid", ["v"], 4, 3, label_col="y")
+        return {
+            (r["g"], r["h"], r["window_id"]): (tuple(r["v_seq"]), r["window_label"])
+            for r in out.collect()
+        }
+
+    want = windows(sliding_windows)
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(parts))
+    try:
+        frames, pandas = windows(sliding_windows), windows(windows_via_pandas)
+    finally:
+        spark.conf.set(key, saved)
+    assert len(want) == 12 + 5 + 6  # the 3-row group has no window
+    assert frames == want
+    assert pandas == want
+
+
 def test_windows_via_pandas_short_group_and_nonstring_keys(spark):
     """Regression (found by tools/w3_tensor_probe.py): a group shorter
     than seq_len returned an empty frame with default float64 columns,
@@ -174,18 +205,22 @@ def _final_plan(df) -> str:
 @pytest.mark.parametrize("step", [15, 22])
 def test_window_summary_stats_wide_hop_plan(spark, step):
     """At ``step >= seq_len`` no sliding row frame is evaluated and the
-    keyed aggregate reuses the ``row_number`` shuffle."""
+    keyed aggregate reuses the ``row_number``'s range exchange on the
+    group keys."""
     import re
 
     from pyspark.sql import Window
 
-    from cicevse2024_tfm_datapipeline_spark.operators.windows import window_summary_stats
+    from cicevse2024_tfm_datapipeline_spark.operators.windows import (
+        _cluster_groups,
+        window_summary_stats,
+    )
 
     df = _stats_input(spark).repartition(3)
     out = window_summary_stats(df, ["g", "h"], "ts", "rid", ["x", "y"], 15, step, "lab")
     plan = _final_plan(out)
     assert not re.search(r"RowFrame, -\d+", plan), plan
-    ranked = df.withColumn(
+    ranked = _cluster_groups(df, ["g", "h"]).withColumn(
         "rn", F.row_number().over(Window.partitionBy("g", "h").orderBy("ts", "rid"))
     )
     exchanges = r"\bExchange\b"
