@@ -10,8 +10,9 @@ func_preproc.py:391-392).
 
 Spark-first shape:
 - W5 standardization = one small agg on the train split (avg + stddev_pop
-  per feature) broadcast back as literal arithmetic — no shuffle of the
-  big table, stays in whole-stage codegen.
+  per feature), broadcast-cross-joined back as one row — no shuffle of the
+  big table and no Spark action of its own: the fit runs inside the query
+  that consumes the scaled frame.
 - W3 windows start from one ``row_number`` ``rn`` over
   ``partitionBy(group).orderBy(ts, tiebreak)``; window ``k`` holds the
   rows with ``k·step < rn ≤ k·step + L``. The stats path can take ``rn``
@@ -19,10 +20,11 @@ Spark-first shape:
   ``row_number``'s sort.
   - The array path (``sliding_windows``) runs trailing row frames
     ``rowsBetween(-(L-1), 0)`` and keeps the window ENDS (``rn >= L`` and
-    ``(rn - L) % step == 0``); the label/episode at the frame end is the
-    current row's value (W4) — no extra pass.
-  - The stats path (``window_summary_stats``) uses the same frames when
-    windows overlap (``step < L``). When they do not, each row is in at
+    ``(rn - L) % step == 0``); the label at the frame end is the current
+    row's value (W4) — no extra pass.
+  - The stats path (``window_summary_stats``) uses the same frames, with
+    mean/std/min/max in place of ``collect_list``, when windows overlap
+    (``step < L``). When they do not, each row is in at
     most one window ``(rn - 1) div step``, and each window is computed once
     with a keyed aggregate on ``(group, window_id)``, clustered on the
     shuffle the ``row_number`` already made.
@@ -38,8 +40,8 @@ rows in one partition, and AQE then merges the small rest into the same
 task (it splits skewed partitions for joins only, never for a window or
 an aggregate). :func:`_cluster_groups` range-partitions the groups into
 the session's shuffle partition count instead (SCALE.md "W1/W3 group
-clustering"). For very long single groups, ``windows_via_pandas`` does
-the same per contiguous chunk with Arrow batches.
+clustering"). Each window frame streams through the JVM, so a group is
+never materialized whole.
 """
 
 from __future__ import annotations
@@ -58,58 +60,19 @@ def _cluster_groups(df: DataFrame, group_cols: Sequence[str]) -> DataFrame:
     whole in one partition, and the groups are spread by their sampled
     row weight rather than by hash. The explicit count keeps AQE from
     coalescing the partitions; a range partitioner makes at most one
-    more of them than there are distinct keys. A per-group ``Window``,
-    aggregate or ``applyInPandas`` after it needs no exchange of its own."""
+    more of them than there are distinct keys. A per-group ``Window`` or
+    aggregate after it needs no exchange of its own."""
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartitionByRange(n, *group_cols)
 
 
-def fit_standardizer(train: DataFrame, features: Sequence[str]) -> dict[str, tuple[float, float]]:
-    """W5: mean/population-std per feature from the TRAIN split only.
+def fit_standardizer(train: DataFrame, features: Sequence[str]) -> DataFrame:
+    """W5: the one-row frame of ``__mu_<f>`` / ``__sigma_<f>`` per feature
+    from the TRAIN split only; lazy, apply with :func:`apply_standardizer`.
 
-    Returns driver-side scalars (one tiny agg job); apply with
-    :func:`apply_standardizer`. sklearn's StandardScaler uses ddof=0 →
-    ``stddev_pop``.
-    """
-    aggs = []
-    for c in features:
-        aggs.append(F.avg(c).alias(f"{c}__mu"))
-        aggs.append(F.stddev_pop(c).alias(f"{c}__sigma"))
-    row = train.agg(*aggs).collect()[0]
-    out: dict[str, tuple[float, float]] = {}
-    for c in features:
-        mu = row[f"{c}__mu"]
-        sigma = row[f"{c}__sigma"]
-        # sklearn maps zero variance → scale 1.0 so constant cols pass through
-        if sigma is None or sigma == 0.0:
-            sigma = 1.0
-        out[c] = (float(mu if mu is not None else 0.0), float(sigma))
-    return out
-
-
-def apply_standardizer(df: DataFrame, stats: dict[str, tuple[float, float]]) -> DataFrame:
-    """(c - mu) / sigma as literal arithmetic — codegen'd, no UDF."""
-    cols = []
-    for c in df.columns:
-        if c in stats:
-            mu, sigma = stats[c]
-            cols.append(((F.col(c) - F.lit(mu)) / F.lit(sigma)).alias(c))
-        else:
-            cols.append(F.col(c))
-    return df.select(*cols)
-
-
-def standardize_via_join(
-    df: DataFrame, features: Sequence[str], train_predicate: Column
-) -> DataFrame:
-    """W5 as ONE lazy plan: broadcast cross-join of the train-split
-    aggregate instead of a driver round-trip.
-
-    Both subtrees (stats and apply) hang off the same upstream plan, so
-    Spark reuses the split's shuffle (ReusedExchange) rather than
-    recomputing it — one pass over the data plus a KB-sized broadcast.
-    Semantics match :func:`fit_standardizer`/:func:`apply_standardizer`
-    (population std; zero/NULL variance → scale 1.0, NULL mean → 0.0).
+    sklearn's StandardScaler uses ddof=0 → ``stddev_pop``; it maps zero
+    variance to scale 1.0 so constant columns pass through, and an empty
+    split gives mean 0.0 and scale 1.0.
     """
     aggs = []
     for c in features:
@@ -119,7 +82,14 @@ def standardize_via_join(
                 f"__sigma_{c}"
             )
         )
-    stats = df.filter(train_predicate).agg(*aggs)
+    return train.agg(*aggs)
+
+
+def apply_standardizer(df: DataFrame, stats: DataFrame) -> DataFrame:
+    """``(c - mu) / sigma`` for each feature of :func:`fit_standardizer`'s
+    ``stats``, over a broadcast cross-join of that one row: the fit runs
+    inside the caller's query, with no driver round-trip and no UDF."""
+    features = {c[len("__mu_"):] for c in stats.columns if c.startswith("__mu_")}
     joined = df.crossJoin(F.broadcast(stats))
     cols = []
     for c in df.columns:
@@ -132,6 +102,48 @@ def standardize_via_join(
     return joined.select(*cols)
 
 
+def _check_shape(seq_len: int, step: int) -> None:
+    """Windows hold ``seq_len >= 1`` rows and start ``step >= 1`` rows apart."""
+    if seq_len < 1 or step < 1:
+        raise ValueError(f"seq_len and step must be >= 1, got seq_len={seq_len}, step={step}")
+
+
+#: the per-feature window stats (NumPy ``std`` is population std)
+_STATS = (("mean", F.avg), ("std", F.stddev_pop), ("min", F.min), ("max", F.max))
+
+
+def _trailing_windows(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    time_col: str,
+    tiebreak_col: str,
+    aggregates: Sequence[tuple[str, Column]],
+    seq_len: int,
+    step: int,
+    label_col: str | None,
+    index_col: str | None,
+) -> DataFrame:
+    """One row per window: each ``(name, aggregate)`` of ``aggregates``
+    evaluated over the trailing ``rowsBetween(-(seq_len-1), 0)`` frame,
+    kept at the window ends (``rn >= seq_len``, ``(rn - seq_len) % step
+    == 0``); the label is the end row's own (W4). Output: group cols,
+    ``window_id``, the aggregates in order, ``window_label``."""
+    _check_shape(seq_len, step)
+    out, order_win = _with_position(df, group_cols, time_col, tiebreak_col, index_col)
+    frame = order_win.rowsBetween(-(seq_len - 1), 0)
+    cols: list[Column] = [F.col(c) for c in group_cols]
+    cols.append((((F.col("__rn") - F.lit(seq_len)) / F.lit(step)).cast("long")).alias("window_id"))
+    for name, agg in aggregates:
+        out = out.withColumn(name, agg.over(frame))
+        cols.append(F.col(name))
+    if label_col is not None:
+        cols.append(F.col(label_col).alias("window_label"))
+    is_end = (F.col("__rn") >= F.lit(seq_len)) & (
+        ((F.col("__rn") - F.lit(seq_len)) % F.lit(step)) == 0
+    )
+    return out.filter(is_end).select(*cols)
+
+
 def sliding_windows(
     df: DataFrame,
     group_cols: Sequence[str],
@@ -141,33 +153,17 @@ def sliding_windows(
     seq_len: int,
     step: int = 1,
     label_col: str | None = None,
-    episode_col: str | None = None,
-    collect_series: bool = True,
 ) -> DataFrame:
     """W3+W4: one row per window.
 
     Output: group cols, ``window_id`` (0-based, reference's ``start/step``),
-    per-feature ``<f>_seq`` arrays (ordered oldest→newest) when
-    ``collect_series``, plus the window-end label/episode columns.
+    per-feature ``<f>_seq`` arrays (ordered oldest→newest), plus the
+    window-end label when ``label_col`` is given.
     """
-    order_win = W.partitionBy(*group_cols).orderBy(F.col(time_col).asc(), F.col(tiebreak_col).asc())
-    frame = order_win.rowsBetween(-(seq_len - 1), 0)
-
-    out = _cluster_groups(df, group_cols).withColumn("__rn", F.row_number().over(order_win))
-    cols: list[Column] = [F.col(c) for c in group_cols]
-    cols.append((((F.col("__rn") - F.lit(seq_len)) / F.lit(step)).cast("long")).alias("window_id"))
-    if collect_series:
-        for f in features:
-            out = out.withColumn(f"{f}_seq", F.collect_list(F.col(f)).over(frame))
-            cols.append(F.col(f"{f}_seq"))
-    if label_col is not None:
-        cols.append(F.col(label_col).alias("window_label"))
-    if episode_col is not None:
-        cols.append(F.col(episode_col).alias("window_episode"))
-    is_end = (F.col("__rn") >= F.lit(seq_len)) & (
-        ((F.col("__rn") - F.lit(seq_len)) % F.lit(step)) == 0
+    aggregates = [(f"{f}_seq", F.collect_list(F.col(f))) for f in features]
+    return _trailing_windows(
+        df, group_cols, time_col, tiebreak_col, aggregates, seq_len, step, label_col, None
     )
-    return out.filter(is_end).select(*cols)
 
 
 def window_summary_stats(
@@ -206,6 +202,7 @@ def window_summary_stats(
     aggregate in ``(time_col, tiebreak_col)`` order within each group, as
     they do straight after ``chrono_split``'s window.
     """
+    _check_shape(seq_len, step)
     stats = _window_stats_keyed if step >= seq_len else _window_stats_frames
     return stats(
         df, group_cols, time_col, tiebreak_col, features, seq_len, step, label_col, index_col
@@ -253,14 +250,7 @@ def _window_stats_keyed(
         df.filter(F.expr(f"(__rn - 1) % {step} < {seq_len}"))
         .withColumn("window_id", F.expr(f"(__rn - 1) div {step}"))
     )
-    aggs: list[Column] = []
-    for f in features:
-        aggs += [
-            F.avg(F.col(f)).alias(f"{f}_mean"),
-            F.stddev_pop(F.col(f)).alias(f"{f}_std"),
-            F.min(F.col(f)).alias(f"{f}_min"),
-            F.max(F.col(f)).alias(f"{f}_max"),
-        ]
+    aggs = [fn(F.col(f)).alias(f"{f}_{s}") for f in features for s, fn in _STATS]
     if label_col is not None:
         aggs.append(F.max_by(F.col(label_col), F.col("__rn")).alias("window_label"))
     aggs.append(F.count(F.lit(1)).alias("__n"))
@@ -283,91 +273,12 @@ def _window_stats_frames(
     label_col: str | None,
     index_col: str | None = None,
 ) -> DataFrame:
-    """Trailing ``rowsBetween(-(seq_len-1), 0)`` aggregates on every row,
-    kept at the window ends (``rn >= seq_len``, ``(rn - seq_len) % step
-    == 0``); the label is the end row's own."""
-    out, order_win = _with_position(df, group_cols, time_col, tiebreak_col, index_col)
-    frame = order_win.rowsBetween(-(seq_len - 1), 0)
-    cols: list[Column] = [F.col(c) for c in group_cols]
-    cols.append((((F.col("__rn") - F.lit(seq_len)) / F.lit(step)).cast("long")).alias("window_id"))
-    for f in features:
-        out = (
-            out.withColumn(f"{f}_mean", F.avg(F.col(f)).over(frame))
-            .withColumn(f"{f}_std", F.stddev_pop(F.col(f)).over(frame))
-            .withColumn(f"{f}_min", F.min(F.col(f)).over(frame))
-            .withColumn(f"{f}_max", F.max(F.col(f)).over(frame))
-        )
-        cols += [F.col(f"{f}_{s}") for s in ("mean", "std", "min", "max")]
-    if label_col is not None:
-        cols.append(F.col(label_col).alias("window_label"))
-    is_end = (F.col("__rn") >= F.lit(seq_len)) & (
-        ((F.col("__rn") - F.lit(seq_len)) % F.lit(step)) == 0
+    """Trailing-frame window stats on every row, kept at the window ends
+    (:func:`_trailing_windows`)."""
+    aggregates = [(f"{f}_{s}", fn(F.col(f))) for f in features for s, fn in _STATS]
+    return _trailing_windows(
+        df, group_cols, time_col, tiebreak_col, aggregates, seq_len, step, label_col, index_col
     )
-    return out.filter(is_end).select(*cols)
-
-
-def windows_via_pandas(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    time_col: str,
-    tiebreak_col: str,
-    features: Sequence[str],
-    seq_len: int,
-    step: int = 1,
-    label_col: str | None = None,
-) -> DataFrame:
-    """W3 fallback via applyInPandas: per-group contiguous windowing with
-    NumPy stride tricks. Same output contract as :func:`sliding_windows`
-    (arrays per feature). Preferred when seq_len is large enough that
-    ``collect_list`` frame re-evaluation dominates — measured crossover at
-    seq_len ≈ 100 for ~70 channels (SCALE.md "W3 tensor-path probe");
-    below that the JVM variant wins at every data size.
-
-    Scale caveat: applyInPandas materializes each GROUP as one pandas
-    frame in executor memory. Use only where groups are bounded by
-    construction (the reference's per-(attack, state, split) series are);
-    for unbounded groups pre-split the key (e.g. add a coarse time bucket
-    with seq_len-1 rows of overlap) or stay on :func:`sliding_windows`,
-    whose window frames stream through the JVM without per-group
-    materialization.
-    """
-    import numpy as np
-    import pandas as pd
-
-    feat = list(features)
-    in_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    out_fields = [f"{c} {in_types[c]}" for c in group_cols]
-    out_fields.append("window_id long")
-    out_fields += [f"{f}_seq array<double>" for f in feat]
-    if label_col is not None:
-        # same contract as sliding_windows: the label keeps its input type
-        out_fields.append(f"window_label {in_types[label_col]}")
-    schema = ", ".join(out_fields)
-
-    def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([time_col, tiebreak_col], kind="mergesort")
-        n = len(pdf)
-        if n < seq_len:
-            # object dtype, not the default float64: Arrow cannot convert
-            # an empty float64 ndarray to list<double>, so a short group
-            # (n < seq_len) would crash the whole job otherwise
-            return pd.DataFrame(
-                {f.split(" ")[0]: pd.Series([], dtype=object) for f in out_fields}
-            )
-        starts = np.arange(0, n - seq_len + 1, step)
-        data: dict[str, object] = {c: pdf[c].iloc[0] for c in group_cols}
-        rows = {c: [data[c]] * len(starts) for c in group_cols}
-        rows["window_id"] = list(range(len(starts)))
-        for f in feat:
-            vals = pdf[f].to_numpy(dtype=float)
-            rows[f"{f}_seq"] = [vals[s : s + seq_len].tolist() for s in starts]
-        if label_col is not None:
-            lab = pdf[label_col].to_numpy()
-            rows["window_label"] = [lab[s + seq_len - 1] for s in starts]
-        return pd.DataFrame(rows)
-
-    clustered = _cluster_groups(df, group_cols)
-    return clustered.groupBy(*group_cols).applyInPandas(per_group, schema=schema)
 
 
 def ewma_truncated(

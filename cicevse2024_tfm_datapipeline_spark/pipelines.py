@@ -8,14 +8,17 @@ points (SURVEY §3) — a user of the reference runs the same lifecycle here:
 The power lifecycle is not one DAG: it runs these Spark actions in turn
 (SURVEY §3.1 'Spark shape'):
 
-1. the standardizer fit, one aggregate over the train split;
-2. the window count per split, which also fills the windows cache;
-3. the metric battery over the cached windows (one aggregate for the
+1. the window count per split, which also fills the windows cache; the
+   standardizer fit (one aggregate over the train split, broadcast back)
+   runs inside this query;
+2. the metric battery over the cached windows (one aggregate for the
    multiclass tasks; the binary battery runs several);
-4. the windows parquet write (with ``output_dir``).
+3. the windows parquet write (with ``output_dir``).
 
 The split tags each row with its position within (attack, state, split),
-so the windows reuse the split's sort: the windows plan has one Sort.
+so the windows reuse the split's sort and add none of their own. The
+windows plan runs the split twice, once for the windows and once under
+the fit's train filter, so it holds one Sort per split pass.
 """
 
 from __future__ import annotations
@@ -84,7 +87,7 @@ def power_windows(events: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, li
     """The lifecycle of :func:`run_power_pipeline` up to the windows
     (label derive → clean → chrono split → train-only scaling → window
     stats): the lazy per-window feature frame and the feature names. Runs
-    one Spark action, the standardizer fit on the train split."""
+    no Spark action: the train-split fit is part of the frame's plan."""
     df = events.withColumn("state_bin", charging_flag_expr(cfg.state_col))
     df, target_col = prepare_labels_for_task(df, cfg.task, cfg.attack_col)
     # P5 + F11: clean and encode
@@ -122,7 +125,9 @@ def run_power_pipeline(spark: SparkSession, events: DataFrame, cfg: PipelineConf
     """The flagship lifecycle (SURVEY §3.1) on a power-shaped frame with
     columns (ts, event_id, attack, state, value). Returns the metrics
     artifact dict; writes windows parquet + metrics.json/config.json when
-    cfg.output_dir is set (S5/S6 artifact contract). The windows are
+    cfg.output_dir is set (S5/S6 artifact contract). Its Spark actions are
+    the per-split count that fills the windows cache (the standardizer fit
+    runs inside it), the metric battery and the write. The windows are
     cached for the run and released on every exit path."""
     t0 = time.perf_counter()
     windows, feats = power_windows(events, cfg)

@@ -15,7 +15,7 @@ from cicevse2024_tfm_datapipeline_spark.operators.scan import footer_grid
 from cicevse2024_tfm_datapipeline_spark.operators.sessionize import ttd_stats
 from cicevse2024_tfm_datapipeline_spark.operators.split import chrono_split
 from cicevse2024_tfm_datapipeline_spark.operators.topk import group_mode, top_k
-from cicevse2024_tfm_datapipeline_spark.operators.windows import standardize_via_join
+from cicevse2024_tfm_datapipeline_spark.operators.windows import apply_standardizer, fit_standardizer
 from cicevse2024_tfm_datapipeline_spark.plans.common import POWER_BASE_SQL, power_view, split_sql, t, pround
 from cicevse2024_tfm_datapipeline_spark.plans.registry import register
 
@@ -245,16 +245,16 @@ def ml_surrogate_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY split
     """,
     doc="W5: StandardScaler fit on TRAIN only (population std, "
-    "func_aux/func_preproc.py:391-392), applied to all splits as literal "
-    "arithmetic — verified by per-split moments of the scaled feature.",
+    "func_aux/func_preproc.py:391-392), applied to all splits through a "
+    "broadcast join of the one-row fit — verified by per-split moments of "
+    "the scaled feature.",
     tags=("W5", "W1"),
 )
 def w5_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     pv = power_view(spark, sf_dir)
     tagged = chrono_split(pv, ["attack", "state"], "ts", "event_id")
-    # one lazy plan (broadcast stats join → ReusedExchange on the split
-    # shuffle) instead of a driver fit round-trip recomputing the split
-    scaled = standardize_via_join(tagged, ["value"], F.col("split") == "train")
+    stats = fit_standardizer(tagged.filter(F.col("split") == "train"), ["value"])
+    scaled = apply_standardizer(tagged, stats)
     return scaled.groupBy("split").agg(
         F.count(F.lit(1)).alias("n_rows"),
         pround(F.avg("value"), 4).alias("scaled_mean"),

@@ -1,5 +1,6 @@
 """The power lifecycle (SURVEY §3.1): the windows reuse the split's sort,
-and the cached windows are released when a later step fails."""
+building them runs no Spark job, and the cached windows are released
+when a later step fails."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import re
 import pytest
 
 from tests.conftest import SF_SMOKE as SF
+from tests.conftest import construction_jobs
 
 
 def _cfg(**kw):
@@ -18,11 +20,13 @@ def _cfg(**kw):
 
 def test_power_windows_sort_once(spark):
     """The windows aggregate at (split, attack, state, window_id) over the
-    split's position, so the executed plan keeps the split's one Sort
-    (the windows' own ``row_number`` added a second) and its one Window
-    node (row number and group count share it). The groups reach it
-    through a range exchange into the session's shuffle partition count,
-    which AQE does not coalesce, not through a hash exchange."""
+    split's position, so they add no Sort or Window of their own (their
+    own ``row_number`` added a third Sort). The plan runs the split twice,
+    for the windows and under the standardizer fit's train filter, so it
+    holds one Sort, one Window node (row number and group count share it)
+    and one range exchange per split pass. The groups reach each through
+    a range exchange into the session's shuffle partition count, which
+    AQE does not coalesce, not through a hash exchange."""
     from cicevse2024_tfm_datapipeline_spark.pipelines import power_windows
     from cicevse2024_tfm_datapipeline_spark.plans.common import power_view
 
@@ -30,15 +34,24 @@ def test_power_windows_sort_once(spark):
     windows.collect()
     plan = windows._jdf.queryExecution().executedPlan().toString()
     plan = plan.split("== Initial Plan ==")[0]  # AQE's final plan only
-    assert len(re.findall(r"\bSort \[", plan)) == 1, plan
-    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    assert len(re.findall(r"\bSort \[", plan)) == 2, plan
+    assert len(re.findall(r"\bWindow \[", plan)) == 2, plan
     ranged = re.findall(
         r"Exchange rangepartitioning\(attack#\d+ ASC NULLS FIRST, "
         r"state#\d+ ASC NULLS FIRST, (\d+)\), REPARTITION_BY_NUM",
         plan,
     )
-    assert ranged == [spark.conf.get("spark.sql.shuffle.partitions")], plan
+    assert ranged == [spark.conf.get("spark.sql.shuffle.partitions")] * 2, plan
     assert not re.search(r"hashpartitioning\(attack#\d+, state#\d+", plan), plan
+
+
+def test_power_windows_build_lazily(spark):
+    """Building the power lifecycle's windows runs no Spark job: the
+    train-split fit is part of the windows' plan, not a collect."""
+    from cicevse2024_tfm_datapipeline_spark.pipelines import power_windows
+    from cicevse2024_tfm_datapipeline_spark.plans.common import power_view
+
+    assert construction_jobs(spark, lambda: power_windows(power_view(spark, SF), _cfg())) == 0
 
 
 def test_power_pipeline_failure_releases_cached_windows(spark, tmp_path):

@@ -38,62 +38,60 @@ def test_window_count_and_label(spark, seq_len, step):
         assert r["window_label"] == str((start + seq_len - 1) % 3)
 
 
-def test_windows_via_pandas_matches_frame_variant(spark):
-    from cicevse2024_tfm_datapipeline_spark.operators.windows import (
-        sliding_windows,
-        windows_via_pandas,
-    )
+def _stride_windows(rows, group_cols, order_cols, feature, seq_len, step, label_col):
+    """Reference W3/W4 by NumPy striding: per group in ``order_cols``
+    order, window ``k`` is rows ``[k·step, k·step + seq_len)`` of
+    ``feature`` with the last row's label; a group shorter than
+    ``seq_len`` has none. Keyed ``(*group, window_id)``."""
+    import numpy as np
 
-    df = make_series(spark, 15)
-    a = sliding_windows(df, ["grp"], "ts", "rid", ["x"], 4, 2, label_col="lab")
-    b = windows_via_pandas(df, ["grp"], "ts", "rid", ["x"], 4, 2, label_col="lab")
-    pa = {r["window_id"]: (r["x_seq"], r["window_label"]) for r in a.collect()}
-    pb = {r["window_id"]: (r["x_seq"], r["window_label"]) for r in b.collect()}
-    assert pa == pb
+    groups = {}
+    for r in rows:
+        groups.setdefault(tuple(r[c] for c in group_cols), []).append(r)
+    out = {}
+    for key, g in groups.items():
+        if len(g) < seq_len:
+            continue
+        g.sort(key=lambda r: tuple(r[c] for c in order_cols))
+        vals = np.array([r[feature] for r in g], dtype=float)
+        for k, win in enumerate(np.lib.stride_tricks.sliding_window_view(vals, seq_len)[::step]):
+            out[(*key, k)] = (tuple(win.tolist()), g[k * step + seq_len - 1][label_col])
+    return out
+
+
+def _by_window(out, group_cols, feature):
+    return {
+        (*(r[c] for c in group_cols), r["window_id"]): (tuple(r[f"{feature}_seq"]), r["window_label"])
+        for r in out.collect()
+    }
 
 
 @pytest.mark.parametrize("parts", [1, 3, 7])
-def test_windows_via_pandas_matches_frame_variant_per_partition_count(spark, parts):
-    """Both array paths cluster the groups by range into the shuffle
-    partition count; their windows agree, and do not depend on it, over
-    several groups, a null group key and tied timestamps."""
-    from cicevse2024_tfm_datapipeline_spark.operators.windows import (
-        sliding_windows,
-        windows_via_pandas,
-    )
+def test_sliding_windows_per_partition_count(spark, parts):
+    """``sliding_windows`` clusters the groups by range into the shuffle
+    partition count; its windows match the reference, and do not depend on
+    that count, over several groups, a null group key and tied
+    timestamps."""
+    from cicevse2024_tfm_datapipeline_spark.operators.windows import sliding_windows
 
-    def windows(fn):
-        df = _stats_input(spark).withColumn("v", F.col("y").cast("double"))
-        out = fn(df, ["g", "h"], "ts", "rid", ["v"], 4, 3, label_col="y")
-        return {
-            (r["g"], r["h"], r["window_id"]): (tuple(r["v_seq"]), r["window_label"])
-            for r in out.collect()
-        }
-
-    want = windows(sliding_windows)
+    df = _stats_input(spark).withColumn("v", F.col("y").cast("double"))
+    want = _stride_windows(df.collect(), ["g", "h"], ("ts", "rid"), "v", 4, 3, "y")
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
     spark.conf.set(key, str(parts))
     try:
-        frames, pandas = windows(sliding_windows), windows(windows_via_pandas)
+        out = sliding_windows(df, ["g", "h"], "ts", "rid", ["v"], 4, 3, label_col="y")
+        got = _by_window(out, ["g", "h"], "v")
     finally:
         spark.conf.set(key, saved)
     assert len(want) == 12 + 5 + 6  # the 3-row group has no window
-    assert frames == want
-    assert pandas == want
+    assert got == want
 
 
-def test_windows_via_pandas_short_group_and_nonstring_keys(spark):
-    """Regression (found by tools/w3_tensor_probe.py): a group shorter
-    than seq_len returned an empty frame with default float64 columns,
-    which Arrow cannot convert to list<double> — crashing the whole job;
-    and the output schema hard-coded group cols as string, so integer
-    group keys (events.user_id) failed the Arrow type check."""
-    import datetime
-
-    from cicevse2024_tfm_datapipeline_spark.operators.windows import (
-        windows_via_pandas,
-    )
+def test_sliding_windows_short_group_and_nonstring_keys(spark):
+    """A group shorter than ``seq_len`` yields no windows, and an integer
+    group key and an integer label keep their types."""
+    from cicevse2024_tfm_datapipeline_spark.operators.windows import sliding_windows
 
     base = datetime.datetime(2024, 1, 1)
     rows = [
@@ -102,16 +100,25 @@ def test_windows_via_pandas_short_group_and_nonstring_keys(spark):
         for i in range(6 if g == 1 else 2)  # group 2 is shorter than seq_len
     ]
     df = spark.createDataFrame(rows, ["gid", "ts", "rid", "x"])
-    out = windows_via_pandas(
-        df, ["gid"], "ts", "rid", ["x"], seq_len=4, step=1, label_col="rid"
-    )
-    got = out.collect()
-    assert {r["gid"] for r in got} == {1}  # short group contributes nothing
+    out = sliding_windows(df, ["gid"], "ts", "rid", ["x"], seq_len=4, step=1, label_col="rid")
+    got = _by_window(out, ["gid"], "x")
+    assert got == _stride_windows(df.collect(), ["gid"], ("ts", "rid"), "x", 4, 1, "rid")
+    assert {k[0] for k in got} == {1}  # short group contributes nothing
     assert len(got) == 3  # windows [0..3],[1..4],[2..5]
-    assert dict(out.dtypes)["gid"] == "bigint"  # key type preserved
-    # label keeps its input type too (was stringified before)
+    assert dict(out.dtypes)["gid"] == "bigint"
     assert dict(out.dtypes)["window_label"] == "bigint"
-    assert sorted(r["window_label"] for r in got) == [3, 4, 5]
+
+
+@pytest.mark.parametrize("seq_len,step", [(0, 1), (-1, 1), (3, 0), (3, -1)])
+@pytest.mark.parametrize("op", ["sliding_windows", "window_summary_stats"])
+def test_bad_window_shape_rejected_at_build(spark, op, seq_len, step):
+    """A window of no rows or a hop that does not move forward is an
+    error when the plan is built, not an empty, partial or failing run."""
+    from cicevse2024_tfm_datapipeline_spark.operators import windows
+
+    build = getattr(windows, op)
+    with pytest.raises(ValueError, match="seq_len and step"):
+        build(make_series(spark, 10), ["grp"], "ts", "rid", ["x"], seq_len, step, label_col="lab")
 
 
 def _stats_input(spark):
@@ -235,9 +242,9 @@ def test_standardizer_population_std(spark):
 
     df = spark.createDataFrame([(1.0,), (2.0,), (3.0,), (4.0,)], ["x"])
     stats = fit_standardizer(df, ["x"])
-    mu, sigma = stats["x"]
-    assert mu == 2.5
-    assert abs(sigma - 1.118033988749895) < 1e-12  # ddof=0, not 1.2909...
+    row = stats.first()
+    assert row["__mu_x"] == 2.5
+    assert abs(row["__sigma_x"] - 1.118033988749895) < 1e-12  # ddof=0, not 1.2909...
     out = [r["x"] for r in apply_standardizer(df, stats).collect()]
     assert abs(sum(out)) < 1e-9
 
@@ -246,39 +253,45 @@ def test_standardizer_constant_column_passthrough(spark):
     from cicevse2024_tfm_datapipeline_spark.operators.windows import fit_standardizer
 
     df = spark.createDataFrame([(5.0,), (5.0,)], ["x"])
-    mu, sigma = fit_standardizer(df, ["x"])["x"]
-    assert sigma == 1.0  # sklearn zero-variance convention
+    assert fit_standardizer(df, ["x"]).first()["__sigma_x"] == 1.0  # sklearn zero-variance convention
 
 
-def test_standardize_via_join_matches_fit_apply(spark):
-    from pyspark.sql import functions as F
+@pytest.mark.parametrize("train_split", ["train", "none"])
+def test_standardizer_matches_numpy(spark, train_split):
+    """fit/apply is ``(v - mean) / std`` with NumPy's population mean and
+    std of the train rows per feature, applied to every split; a constant
+    column keeps scale 1.0, and an empty train split gives mean 0.0 and
+    scale 1.0."""
+    import numpy as np
 
     from cicevse2024_tfm_datapipeline_spark.operators.windows import (
         apply_standardizer,
         fit_standardizer,
-        standardize_via_join,
     )
 
     rows = [
-        ("train", 1.0, 10.0),
-        ("train", 2.0, 10.0),
-        ("train", 3.0, 10.0),  # y constant on train → sigma 1.0 passthrough
-        ("val", 10.0, 7.0),
-        ("test", -4.0, 11.0),
+        ("train", 1.0, 10.0, "a"),
+        ("train", 2.0, 10.0, "b"),
+        ("train", 3.5, 10.0, "c"),  # y constant on train → sigma 1.0 passthrough
+        ("val", 10.0, 7.0, "d"),
+        ("test", -4.0, 11.0, "e"),
     ]
-    df = spark.createDataFrame(rows, ["split", "x", "y"])
-    pred = F.col("split") == "train"
+    df = spark.createDataFrame(rows, ["split", "x", "y", "k"])
+    stats = fit_standardizer(df.filter(F.col("split") == train_split), ["x", "y"])
+    out = apply_standardizer(df, stats)
+    assert out.columns == df.columns
+    got = {r["k"]: (r["x"], r["y"]) for r in out.collect()}
 
-    stats = fit_standardizer(df.filter(pred), ["x", "y"])
-    want = {
-        (r["split"], r["x"], r["y"])
-        for r in apply_standardizer(df, stats).collect()
-    }
-    got = {
-        (r["split"], r["x"], r["y"])
-        for r in standardize_via_join(df, ["x", "y"], pred).collect()
-    }
-    assert got == want
+    def scale(i):
+        train = np.array([r[i] for r in rows if r[0] == train_split])
+        if len(train) == 0:
+            return 0.0, 1.0
+        return train.mean(), (train.std() or 1.0)
+
+    (mu_x, sd_x), (mu_y, sd_y) = scale(1), scale(2)
+    assert sd_y == 1.0
+    for _, x, y, k in rows:
+        assert got[k] == (pytest.approx((x - mu_x) / sd_x, rel=1e-12), (y - mu_y) / sd_y), k
 
 
 def test_ewma_truncated_matches_pandas_adjust_false(spark):
